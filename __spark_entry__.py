@@ -3,8 +3,8 @@
 ``entry(spark)``   — flagship: synthesize a Common-Crawl-style pages
                      table FROM /root/testdata/sf0.001/documents.parquet
                      and run the full crawl engine on it (admission ->
-                     politeness -> fetch-join -> extraction -> bloom-
-                     pruned dedup), returning the results table.
+                     politeness -> fetch-join -> extraction -> seen-
+                     index dedup), returning the results table.
 ``queries()``      — one entry per implemented operator (SURVEY.md §2
                      crawl-dataflow analogs + training-data ops).
 ``oracle_sql()``   — DuckDB-dialect equivalents for everything
@@ -2886,7 +2886,7 @@ def q_state_lookup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         url.alias("url"), F.lit(KIND_PROCESSED_AND_STORED).alias("kind")
     )
     root = tempfile.mkdtemp(prefix="atra_entry_si")
-    idx = SeenIndex(os.path.join(root, "si"), num_buckets=8, bloom_bits=1 << 14)
+    idx = SeenIndex(os.path.join(root, "si"), num_buckets=8)
     idx.add_urls(r0, 0)
     idx.commit()
     idx.add_urls(r1, 1)
@@ -3091,7 +3091,7 @@ def _ensure_entry_crawl(spark: SparkSession):
 def q_crawl_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two full crawl rounds on the deterministic fixture corpus:
     admission -> politeness window -> fetch-join -> Arrow extraction ->
-    bloom-pruned dedup. Oracle: the serial oracle crawler's results
+    seen-index dedup. Oracle: the serial oracle crawler's results
     parquet (read_parquet) — url set, host, round, status, n_links."""
     store = _ensure_entry_crawl(spark)
     res = store.read_union(spark, "results")

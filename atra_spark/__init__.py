@@ -12,7 +12,7 @@ Subpackages
 - ``atra_spark.schemas``    explicit StructTypes for every table
 - ``atra_spark.urlkit``     pure-Python URL kernel (canonicalize, origin, depth)
 - ``atra_spark.functions``  vectorized pandas UDFs (decode, extract, lang, dedup)
-- ``atra_spark.operators``  frontier / seen-set / politeness / bloom operators
+- ``atra_spark.operators``  frontier / seen-set / politeness operators
 - ``atra_spark.sources``    deterministic fixture synthesis + table store
 - ``atra_spark.plans``      the round-loop crawl driver
 """

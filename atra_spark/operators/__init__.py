@@ -1,2 +1,2 @@
-"""Frontier / seen-set / politeness / bloom operators — the crawl
+"""Frontier / seen-set / politeness operators — the crawl
 dataflow stages of SURVEY.md §2, expressed as DataFrame ops."""

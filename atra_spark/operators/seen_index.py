@@ -1,8 +1,7 @@
 """Persistent per-bucket seen-set membership + link-state index.
 
 The reference answers "have I seen this URL?" and "what state is it
-in?" with RocksDB point lookups: an in-block bloom check first, then
-the exact key lookup (``key_may_exist_cf``,
+in?" with RocksDB point lookups (``key_may_exist_cf``,
 atra/src/recrawl_management/mod.rs:62; exact get + merge-operator fold
 in link_state/db.rs, the dequeue state check at
 queue/.../polling.rs:180-204). This module is that storage engine
@@ -16,49 +15,50 @@ mapped onto Spark's execution model:
   additional exchange (``aligned=True``): every bucket's rows already
   sit in exactly one task, and AQE partition coalescing only merges
   whole buckets, never splits one;
-- each bucket owns an immutable bloom bitmap file (rewritten only in
-  rounds that add URLs to that bucket) and a chain of per-round delta
-  parquet files (RocksDB memtable-flush/SST economics: appends only,
-  periodic compaction, never a full-index rewrite). Deltas store TWO
-  independent 64-bit hashes per URL — ``xxhash64(url)`` and
-  ``xxhash64(url, 1)`` — plus the URL's link-state ``kind`` byte:
-  17 bytes/URL instead of the URL string. The exact confirm is a
-  lexsorted-numpy pair lookup; within a chain the NEWEST occurrence
-  of a pair wins, which makes the chain the merge-operator fold of
-  the reference's state transitions (raw.rs:249-306: the newer
-  operand's kind wins). The 128-bit composite makes a false "seen"
-  verdict a 2^-128-scale event (expected colliding pairs at 10^10
-  URLs: n^2/2^129 ~= 1.5e-19) — exact for any real corpus;
+- each bucket owns a chain of per-round delta parquet files (RocksDB
+  memtable-flush/SST economics: appends only, periodic compaction,
+  never a full-index rewrite). Deltas store TWO independent 64-bit
+  hashes per URL — ``xxhash64(url)`` and ``xxhash64(url, 1)`` — plus
+  the URL's link-state ``kind`` byte: 17 bytes/URL instead of the URL
+  string. Lookup is a lexsorted-numpy pair search; within a chain the
+  NEWEST occurrence of a pair wins, which makes the chain the
+  merge-operator fold of the reference's state transitions
+  (raw.rs:249-306: the newer operand's kind wins). The 128-bit
+  composite makes a false "seen" verdict a 2^-128-scale event
+  (expected colliding pairs at 10^10 URLs: n^2/2^129 ~= 1.5e-19) —
+  exact for any real corpus;
 - membership probing (``prune_new``) and state lookup
-  (``filter_by_state``) run ``mapInPandas``: each task loads ONLY its
-  buckets' bitmaps (and, only for rows the bloom cannot reject, that
-  bucket's delta chain) from shared storage, with a per-worker LRU
-  cache across tasks.
+  (``filter_by_state``) run ``mapInPandas`` over one shared kernel:
+  each task loads ONLY its buckets' hash-pair chains from shared
+  storage, with a per-worker LRU cache across tasks, and searches
+  them with ``np.searchsorted``.
+
+The reference puts an approximate-membership check in front of its
+exact lookup because that lookup is a disk read. Here the exact
+lookup is an in-memory binary search over an array the worker has
+cached anyway, so the pair index is the ONLY membership structure:
+a second filter would cost per-round upkeep and could only skip the
+search for rows that are new.
 
 Serving the dequeue state check from this index is what removes the
 last per-round O(|seen|) read from the engine: the seen TABLE is now
 read only at compaction / recovery / analytics time, while the
-admission path pays (bitmap + chain) reads for exactly the buckets
-the frontier touches — cost tracking |frontier|, not |seen|, the
-reference's own point-lookup economics.
+admission path pays chain reads for exactly the buckets the frontier
+touches — cost tracking |frontier|, not |seen|, the reference's own
+point-lookup economics.
 
-Nothing is broadcast and the driver never holds a bitmap: executor
-residency is bounded by (buckets per task) x bitmap size + the LRU
-cap, not by the whole index. Sizing at 10^10 URLs / 1% fp: the
-optimal bloom needs m = -n*ln(0.01)/ln(2)^2 ~= 9.6 bits per URL ->
-~12 GB of bitmaps TOTAL; with B = 4096 buckets that is ~3 MB per
-bucket — one small object-store read per task, never a 12 GB
-broadcast. Exact-confirm deltas are ~2.4M URLs/bucket (~41 MB of
-hash-pair+kind rows, vs ~200 MB as URL strings), read only by tasks
-whose batch has bloom hits and cached across tasks by delta chain
-(the chain grows by one small file per round, so a warm worker reads
-only the newest delta).
+Nothing is broadcast and the driver holds only file names: executor
+residency is bounded by (buckets per task) x chain size + the LRU
+cap, not by the whole index. Sizing at 10^10 URLs with B = 4096
+buckets: ~2.4M URLs/bucket, ~41 MB of hash-pair+kind rows (vs ~200 MB
+as URL strings), cached across tasks by delta chain (the chain grows
+by one small file per round, so a warm worker reads only the newest
+delta).
 
 The index is a rebuildable cache over the committed ``seen`` table:
 the manifest is committed by the driver only after the round's store
 commits succeed, and resume-from-checkpoint rebuilds the index from
-the seen snapshot when the manifest round disagrees (same recovery
-contract the round-1/2 driver-resident blooms had).
+the seen snapshot when the manifest round disagrees.
 """
 
 from __future__ import annotations
@@ -83,10 +83,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .bloom import _K_HASHES, _positions  # shared geometry: build == probe
 from ..schemas import KIND_DISCOVERED
 
-_FORMAT = 3  # v3: deltas carry the link-state kind (state lookups served here)
+_FORMAT = 4  # on-disk layout version: a directory of any other version is reset
 _BUCKET_COL = "_si_bucket"
 _H1_COL = "_si_h1"
 _H2_COL = "_si_h2"
@@ -96,10 +95,8 @@ _KIND_COL = "_si_kind"
 # per-worker caches (live in the reused Python worker processes; an
 # executor only ever caches the buckets it actually probed)
 # ---------------------------------------------------------------------------
-_BLOOM_CACHE: OrderedDict[str, np.ndarray] = OrderedDict()
 _HASHSET_CACHE: OrderedDict[str, tuple[tuple, np.ndarray, np.ndarray, np.ndarray]] = OrderedDict()
-_BLOOM_CACHE_CAP = int(os.environ.get("ATRA_SEEN_BLOOM_CACHE", "256"))
-_HASHSET_CACHE_CAP = int(os.environ.get("ATRA_SEEN_URLSET_CACHE", "64"))
+_HASHSET_CACHE_CAP = 64
 
 
 def _cache_put(cache: OrderedDict, cap: int, key, value) -> None:
@@ -107,17 +104,6 @@ def _cache_put(cache: OrderedDict, cap: int, key, value) -> None:
     cache.move_to_end(key)
     while len(cache) > cap:
         cache.popitem(last=False)
-
-
-def _load_bloom(storage, bucket: int, name: str) -> np.ndarray:
-    key = storage.key(bucket, name)
-    bits = _BLOOM_CACHE.get(key)
-    if bits is None:
-        bits = np.frombuffer(storage.read_bytes(bucket, name), dtype=np.uint8)
-        _cache_put(_BLOOM_CACHE, _BLOOM_CACHE_CAP, key, bits)
-    else:
-        _BLOOM_CACHE.move_to_end(key)
-    return bits
 
 
 def _dedup_last(
@@ -208,22 +194,22 @@ def _pair_lookup(
     return out
 
 
-def _pair_isin(
-    c1: np.ndarray, c2: np.ndarray, s1: np.ndarray, s2: np.ndarray
-) -> np.ndarray:
-    """Membership of (c1, c2) pairs in the deduped lexsorted seen pairs
-    (no kind materialization — the prune_new hot path)."""
-    if len(s1) == 0:
-        return np.zeros(len(c1), dtype=bool)
-    left = np.searchsorted(s1, c1, "left")
-    right = np.searchsorted(s1, c1, "right")
-    found = np.zeros(len(c1), dtype=bool)
-    one = (right - left) == 1
-    if one.any():
-        found[one] = s2[left[one]] == c2[one]
-    for i in np.nonzero((right - left) > 1)[0]:
-        found[i] = c2[i] in s2[left[i] : right[i]]
-    return found
+def _lookup_kinds(pdf: pd.DataFrame, buckets_meta: dict, storage) -> np.ndarray:
+    """Latest indexed kind for every row of one tagged batch (-1 when
+    the URL is not indexed): per bucket, load its (cached) chain and
+    run ``_pair_lookup``. The one kernel behind both probes."""
+    kinds = np.full(len(pdf), -1, dtype=np.int32)
+    b_arr = pdf[_BUCKET_COL].to_numpy()
+    h1_arr = pdf[_H1_COL].to_numpy()
+    h2_arr = pdf[_H2_COL].to_numpy()
+    for b in np.unique(b_arr):
+        deltas = buckets_meta.get(int(b))
+        if not deltas:  # bucket never indexed -> nothing in it is seen
+            continue
+        sel = b_arr == b
+        s1, s2, sk = _load_hashset(storage, int(b), deltas)
+        kinds[sel] = _pair_lookup(h1_arr[sel], h2_arr[sel], s1, s2, sk)
+    return kinds
 
 
 def _atomic_write(path: str, data: bytes) -> None:
@@ -236,8 +222,8 @@ def _atomic_write(path: str, data: bytes) -> None:
 class LocalBucketStorage:
     """Bucket-object I/O seam for the SeenIndex (VERDICT r3 #5).
 
-    Every byte the index reads or writes — bloom bitmaps and hash-pair
-    delta parquets, one directory per bucket — goes through this
+    Every byte the index reads or writes — the hash-pair delta
+    parquets, one directory per bucket — goes through this
     object, on the driver AND inside executor tasks (it is a plain
     picklable value: just the root path). The local-filesystem
     implementation below is what local[n] and shared-fs clusters use;
@@ -427,11 +413,11 @@ def _default_storage(root: str):
 
 
 def _hash_cols(col):
-    """The index's key triple, all JVM-side: bucket routing uses
-    Spark's own hash-partitioning function (murmur3 via F.hash, the
+    """The index's hash pair, both JVM-side: two independent xxhash64
+    values form the 128-bit lookup key (bucket routing is separate:
+    Spark's own hash-partitioning function, murmur3 via F.hash, the
     same Pmod(Murmur3Hash(url), B) assignment groupBy(url) produces —
-    pinned by tests), bloom positions + exact confirm use two
-    independent xxhash64 values."""
+    pinned by tests)."""
     return (
         F.xxhash64(col).alias(_H1_COL),
         F.xxhash64(col, F.lit(1)).alias(_H2_COL),
@@ -443,7 +429,7 @@ class SeenIndex:
     bucket).
 
     Lifecycle per round: ``add_urls`` (distributed Spark job; executors
-    write bloom + delta files for their buckets) -> the engine commits
+    write one delta file per touched bucket) -> the engine commits
     the round's store tables -> ``commit`` (driver writes the tiny
     manifest atomically). Probes serve the last committed manifest
     only, so a crashed round can never drop a candidate that was
@@ -454,40 +440,27 @@ class SeenIndex:
         self,
         root: str,
         num_buckets: int = 32,
-        bloom_bits: int = 1 << 20,
         storage: "LocalBucketStorage | FlatObjectBucketStorage | None" = None,
     ) -> None:
         self.root = root
         self.storage = storage if storage is not None else _default_storage(root)
         self.num_buckets = num_buckets
-        self.bloom_bits = bloom_bits
         os.makedirs(root, exist_ok=True)
         self._manifest = self._load_manifest()
-        # ordering matters: the format check runs FIRST so a stale
-        # on-disk format auto-migrates even when its geometry also
-        # differs (an old manifest must never reach the geometry
-        # checks below)
-        if self._manifest and self._manifest.get("format") != _FORMAT:
-            # on-disk format from an older engine version: the index is
-            # a rebuildable CACHE over the committed seen table, so
-            # auto-migrate by dropping it — committed_round becomes
-            # None, which the engine's resume path already treats as
-            # "rebuild from the seen snapshot" (plans/crawl.py)
-            self.reset()
-        if self._manifest and self._manifest.get("num_buckets") != num_buckets:
+        if self._manifest and (
+            self._manifest.get("format") != _FORMAT
             # a different bucket count re-routes every URL: probing old
             # bucket files under the new routing would miss seen URLs
-            # (silent re-crawls). Like a format change, drop the cache
-            # and let resume rebuild under the requested geometry
-            # (bench/tools legitimately derive B from the session's
-            # shuffle-partition count, which varies across runs).
+            # (silent re-crawls); bench/tools legitimately derive B from
+            # the session's shuffle-partition count, which varies
+            or self._manifest.get("num_buckets") != num_buckets
+        ):
+            # the index is a rebuildable CACHE over the committed seen
+            # table, so an older on-disk format or another geometry is
+            # dropped — committed_round becomes None, which the engine's
+            # resume path already treats as "rebuild from the seen
+            # snapshot" (plans/crawl.py)
             self.reset()
-        if self._manifest and self._manifest["bloom_bits"] != bloom_bits:
-            raise ValueError(
-                f"seen-index bloom geometry mismatch: manifest m="
-                f"{self._manifest['bloom_bits']} vs requested {bloom_bits} "
-                "(bitmaps of different m are position-incompatible)"
-            )
         self._pending: dict[str, dict] | None = None
         self._pending_round: int | None = None
 
@@ -501,6 +474,13 @@ class SeenIndex:
             return None
         with open(p) as f:
             return json.load(f)
+
+    def _publish_manifest(self, manifest: dict) -> None:
+        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
+        with os.fdopen(fd, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, self._manifest_path())
+        self._manifest = manifest
 
     @property
     def committed_round(self) -> int | None:
@@ -517,18 +497,15 @@ class SeenIndex:
     def add_urls(self, df: DataFrame, round_no: int) -> int:
         """Index one round's state rows (columns ``url`` [+ ``kind``];
         a missing kind column means Discovered — pure membership use).
-        Distributed: one task per touched bucket reads that bucket's
-        current bitmap, ORs in the new URLs' bits, writes an immutable
-        ``bloom_r{N}`` bitmap + a ``hashes_r{N}.parquet`` delta (two
-        int64 hash columns + kind, never URL strings), and returns one
-        tiny summary row. A URL already indexed may appear again with a
-        new kind: the chain fold makes the newest kind win (the merge-
-        operator semantics). Buckets with no rows are untouched (their
-        files are not rewritten). Returns the number of URLs staged."""
-        m = self.bloom_bits
+        Distributed: one task per touched bucket writes a
+        ``hashes_r{N}.parquet`` delta (two int64 hash columns + kind,
+        never URL strings) and returns one tiny summary row. A URL
+        already indexed may appear again with a new kind: the chain fold
+        makes the newest kind win (the merge-operator semantics).
+        Buckets with no rows are untouched. Returns the number of URLs
+        staged."""
         storage = self.storage
         buckets_meta = (self._manifest or {}).get("buckets", {})
-        cur_blooms = {int(b): v["bloom"] for b, v in buckets_meta.items()}
 
         kind_col = (
             F.col("kind").cast("int") if "kind" in df.columns else F.lit(KIND_DISCOVERED)
@@ -543,25 +520,12 @@ class SeenIndex:
             [
                 StructField("bucket", IntegerType()),
                 StructField("n", LongType()),
-                StructField("bloom_file", StringType()),
                 StructField("delta_file", StringType()),
             ]
         )
 
         def _build(pdf: pd.DataFrame) -> pd.DataFrame:
             b = int(pdf[_BUCKET_COL].iloc[0])
-            prev = cur_blooms.get(b)
-            if prev is not None:
-                bits = np.frombuffer(
-                    storage.read_bytes(b, prev), dtype=np.uint8
-                ).copy()
-            else:
-                bits = np.zeros(m // 8, dtype=np.uint8)
-            h = pdf[_H1_COL].to_numpy()
-            for pos in _positions(h, m):
-                np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-            bloom_name = f"bloom_r{round_no:05d}.bin"
-            storage.write_bytes(b, bloom_name, bits.tobytes())
             delta_name = f"hashes_r{round_no:05d}.parquet"
             storage.write_pairs(
                 b,
@@ -570,20 +534,15 @@ class SeenIndex:
                 pdf[_H2_COL].to_numpy(),
                 pdf[_KIND_COL].to_numpy(),
             )
-            return pd.DataFrame(
-                {"bucket": [b], "n": [len(pdf)],
-                 "bloom_file": [bloom_name], "delta_file": [delta_name]}
-            )
+            return pd.DataFrame({"bucket": [b], "n": [len(pdf)], "delta_file": [delta_name]})
 
         rows = hashed.groupBy(_BUCKET_COL).applyInPandas(_build, out_schema).collect()
         pending = {b: dict(v) for b, v in buckets_meta.items()}
         n_total = 0
         for r in rows:
             b = str(r["bucket"])
-            ent = pending.get(b, {"bloom": None, "deltas": []})
-            ent["bloom"] = r["bloom_file"]
-            ent["deltas"] = list(ent.get("deltas", [])) + [r["delta_file"]]
-            pending[b] = ent
+            deltas = pending.get(b, {}).get("deltas", [])
+            pending[b] = {"deltas": list(deltas) + [r["delta_file"]]}
             n_total += r["n"]
         self._pending = pending
         self._pending_round = round_no
@@ -594,18 +553,14 @@ class SeenIndex:
         Call AFTER the round's store tables committed."""
         if self._pending is None:
             return
-        manifest = {
-            "round": self._pending_round,
-            "format": _FORMAT,
-            "bloom_bits": self.bloom_bits,
-            "num_buckets": self.num_buckets,
-            "buckets": self._pending,
-        }
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
-        self._manifest = manifest
+        self._publish_manifest(
+            {
+                "round": self._pending_round,
+                "format": _FORMAT,
+                "num_buckets": self.num_buckets,
+                "buckets": self._pending,
+            }
+        )
         self._pending = None
         self._pending_round = None
 
@@ -618,14 +573,10 @@ class SeenIndex:
         self.commit()
 
     @staticmethod
-    def _compact_bucket(
-        storage, bucket: int, deltas: list[str], base_name: str,
-        keep_bloom_names: set[str], keep_blooms: int,
-    ) -> None:
-        """Fold ONE bucket's delta chain into a deduped base file and
-        GC its superseded bloom bitmaps — runs on the driver (local
-        path) or inside an executor task (distributed path), all I/O
-        through the storage seam.
+    def _compact_bucket(storage, bucket: int, deltas: list[str], base_name: str) -> None:
+        """Fold ONE bucket's delta chain into a deduped base file — runs
+        on the driver (local path) or inside an executor task
+        (distributed path), all I/O through the storage seam.
 
         Crash safety (ADVICE r5, medium): this phase only WRITES the
         new base — superseded delta files are garbage-collected by
@@ -633,34 +584,23 @@ class SeenIndex:
         crash or retried task anywhere in here leaves the committed
         manifest's whole chain readable (and the task idempotent: a
         retry re-reads the still-present chain and rewrites the same
-        base). Bloom GC stays here because the manifest references
-        exactly one bitmap per bucket (``keep_bloom_names``), which is
-        always kept."""
-        if len(deltas) > 1:
-            parts1, parts2, partsk = [], [], []
-            for d in deltas:
-                h1a, h2a, ka = storage.read_pairs(bucket, d)
-                parts1.append(h1a)
-                parts2.append(h2a)
-                partsk.append(ka)
-            s1, s2, sk = _dedup_last(
-                np.concatenate(parts1), np.concatenate(parts2), np.concatenate(partsk)
-            )
-            storage.write_pairs(bucket, base_name, s1, s2, sk)
-        # GC superseded bloom bitmaps (keep the newest few)
-        blooms = sorted(
-            f for f in storage.list_bucket(bucket)
-            if f.startswith("bloom_r") and f.endswith(".bin")
+        base)."""
+        parts1, parts2, partsk = [], [], []
+        for d in deltas:
+            h1a, h2a, ka = storage.read_pairs(bucket, d)
+            parts1.append(h1a)
+            parts2.append(h2a)
+            partsk.append(ka)
+        s1, s2, sk = _dedup_last(
+            np.concatenate(parts1), np.concatenate(parts2), np.concatenate(partsk)
         )
-        for f_old in blooms[:-keep_blooms]:
-            if f_old not in keep_bloom_names:
-                storage.remove(bucket, f_old)
+        storage.write_pairs(bucket, base_name, s1, s2, sk)
 
-    def compact(self, spark=None, keep_blooms: int = 2) -> None:
+    def compact(self, spark=None) -> None:
         """Fold each bucket's delta chain into one deduped file (latest
-        kind per pair — the chain fold burned in) and GC stale bloom
-        bitmaps. With a SparkSession the fold runs as ONE DISTRIBUTED
-        job, one task per bucket (the same per-bucket task shape as
+        kind per pair — the chain fold burned in). With a SparkSession
+        the fold runs as ONE DISTRIBUTED job, one task per bucket with
+        more than one delta (the same per-bucket task shape as
         ``add_urls`` — the cluster path: nothing bucket-sized touches
         the driver); without one it loops buckets driver-side (fine on
         local/shared fs). Probe caches key on the chain, so a
@@ -669,33 +609,26 @@ class SeenIndex:
             return
         storage = self.storage
         rnd = self._manifest["round"]
-        work = []  # (bucket, deltas, base_name, live bloom)
-        for b, ent in self._manifest["buckets"].items():
-            work.append(
-                (int(b), list(ent.get("deltas", [])),
-                 f"hashes_base_r{rnd:05d}.parquet", ent["bloom"])
-            )
-        if spark is not None and work:
-            kb = keep_blooms
+        base_name = f"hashes_base_r{rnd:05d}.parquet"
+        buckets = self._manifest["buckets"]
+        fold = {int(b): ent["deltas"] for b, ent in buckets.items() if len(ent["deltas"]) > 1}
+        if spark is not None and fold:
             compact_one = SeenIndex._compact_bucket
 
             def _task(pdf: pd.DataFrame) -> pd.DataFrame:
                 for row in pdf.itertuples(index=False):
-                    compact_one(
-                        storage, int(row.bucket), json.loads(row.deltas),
-                        row.base_name, {row.bloom}, kb,
-                    )
+                    compact_one(storage, int(row.bucket), json.loads(row.deltas), base_name)
                 return pdf[["bucket"]]
 
             spark.createDataFrame(
-                [(b, json.dumps(ds), bn, bl) for b, ds, bn, bl in work],
-                "bucket int, deltas string, base_name string, bloom string",
-            ).repartition(len(work), F.col("bucket")).groupBy("bucket").applyInPandas(
+                [(b, json.dumps(ds)) for b, ds in fold.items()],
+                "bucket int, deltas string",
+            ).repartition(len(fold), F.col("bucket")).groupBy("bucket").applyInPandas(
                 _task, StructType([StructField("bucket", IntegerType())])
             ).count()
         else:
-            for b, ds, bn, bl in work:
-                SeenIndex._compact_bucket(storage, b, ds, bn, {bl}, keep_blooms)
+            for b, ds in fold.items():
+                SeenIndex._compact_bucket(storage, b, ds, base_name)
         # two-phase publish (ADVICE r5, medium): 1) bases written above,
         # 2) commit the manifest pointing at [base] — only NOW are the
         # old chains unreferenced — 3) GC superseded delta files. A
@@ -704,27 +637,23 @@ class SeenIndex:
         # below removes on the next compaction (it deletes every
         # hashes file at or below the compacted round that the new
         # manifest does not reference, so orphans cannot accumulate).
-        for b, ds, bn, _bl in work:
-            if len(ds) > 1:
-                self._manifest["buckets"][str(b)]["deltas"] = [bn]
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self._manifest, f)
-        os.replace(tmp, self._manifest_path())
+        for b in fold:
+            buckets[str(b)]["deltas"] = [base_name]
+        self._publish_manifest(self._manifest)
         hashes_re = re.compile(r"^hashes(?:_base)?_r(\d+)\.parquet$")
-        for b, _ds, _bn, _bl in work:
-            live = set(self._manifest["buckets"][str(b)].get("deltas", []))
-            for name in self.storage.list_bucket(b):
+        for b, ent in buckets.items():
+            live = set(ent["deltas"])
+            for name in storage.list_bucket(int(b)):
                 m_f = hashes_re.match(name)
                 # never touch files from rounds NEWER than the compacted
                 # manifest round (e.g. staged-but-uncommitted adds)
                 if m_f and int(m_f.group(1)) <= rnd and name not in live:
-                    self.storage.remove(b, name)
+                    storage.remove(int(b), name)
 
     # -- probe ---------------------------------------------------------------
-    def _buckets_meta(self) -> dict[int, tuple[str, tuple[str, ...]]]:
+    def _buckets_meta(self) -> dict[int, tuple[str, ...]]:
         return {
-            int(b): (v["bloom"], tuple(v.get("deltas", [])))
+            int(b): tuple(v["deltas"])
             for b, v in ((self._manifest or {}).get("buckets", {})).items()
         }
 
@@ -742,14 +671,12 @@ class SeenIndex:
         """candidates minus the indexed seen set — the engine's core
         anti-join, without ever shuffling the seen table.
 
-        Plan shape: one ``mapInPandas`` pass where each task
-        bloom-probes against only ITS buckets' bitmaps; rows the bloom
-        rejects are definitely new (bloom guarantee), rows it cannot
-        reject are confirmed against that bucket's 128-bit hash-pair
-        delta chain. No broadcast, no driver residency, no seen-side
-        shuffle: per round the seen set costs one bitmap read per task
-        plus (only on bloom hits) the bucket's hash pairs, LRU-cached
-        across tasks per worker.
+        Plan shape: one ``mapInPandas`` pass where each task looks its
+        rows up in only ITS buckets' 128-bit hash-pair chains and keeps
+        the rows that are not indexed. No broadcast, no driver
+        residency, no seen-side shuffle: per round the seen set costs
+        each task its buckets' hash pairs, LRU-cached across tasks per
+        worker.
 
         ``aligned=True`` skips the bucket repartition: the caller
         promises ``candidates`` is already hash-partitioned by ``key``
@@ -769,31 +696,7 @@ class SeenIndex:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                b_arr = pdf[_BUCKET_COL].to_numpy()
-                h1_arr = pdf[_H1_COL].to_numpy()
-                h2_arr = pdf[_H2_COL].to_numpy()
-                for b in np.unique(b_arr):
-                    sel = b_arr == b
-                    meta = buckets_meta.get(int(b))
-                    if meta is None:  # bucket never indexed -> all new
-                        keep[sel] = True
-                        continue
-                    bloom_name, deltas = meta
-                    bits = _load_bloom(storage, int(b), bloom_name)
-                    m = len(bits) * 8
-                    h = h1_arr[sel]
-                    maybe = np.ones(h.shape, dtype=bool)
-                    for pos in _positions(h, m):
-                        maybe &= (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-                    k = ~maybe  # bloom miss -> definitely new
-                    if maybe.any() and deltas:
-                        s1, s2, _sk = _load_hashset(storage, int(b), deltas)
-                        in_seen = _pair_isin(h1_arr[sel], h2_arr[sel], s1, s2)
-                        k |= maybe & ~in_seen  # fp rescue: not actually seen
-                    elif maybe.any():
-                        k |= maybe  # bloom says maybe but no exact data -> new
-                    keep[sel] = k
+                keep = _lookup_kinds(pdf, buckets_meta, storage) < 0
                 if keep.any():
                     yield pdf.loc[keep, out_cols]
 
@@ -818,10 +721,10 @@ class SeenIndex:
         unindexed URLs). ``with_kind=True`` appends the latest ``kind``
         as an int column.
 
-        Same economics as ``prune_new``: no seen-table scan, no
-        broadcast; each task reads only the bitmaps + chains of the
-        buckets its rows hash to, LRU-cached across tasks — per-round
-        read cost tracks the probe side (the frontier), never |seen|.
+        Same kernel and economics as ``prune_new``: no seen-table scan,
+        no broadcast; each task reads only the chains of the buckets
+        its rows hash to, LRU-cached across tasks — per-round read cost
+        tracks the probe side (the frontier), never |seen|.
         """
         buckets_meta = self._buckets_meta()
         storage = self.storage
@@ -837,27 +740,7 @@ class SeenIndex:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                kinds = np.full(len(pdf), -1, dtype=np.int32)
-                b_arr = pdf[_BUCKET_COL].to_numpy()
-                h1_arr = pdf[_H1_COL].to_numpy()
-                h2_arr = pdf[_H2_COL].to_numpy()
-                for b in np.unique(b_arr):
-                    sel = b_arr == b
-                    meta = buckets_meta.get(int(b))
-                    if meta is None:  # bucket never indexed -> no state
-                        continue
-                    bloom_name, deltas = meta
-                    bits = _load_bloom(storage, int(b), bloom_name)
-                    m = len(bits) * 8
-                    h = h1_arr[sel]
-                    maybe = np.ones(h.shape, dtype=bool)
-                    for pos in _positions(h, m):
-                        maybe &= (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-                    if maybe.any() and deltas:
-                        s1, s2, sk = _load_hashset(storage, int(b), deltas)
-                        got = _pair_lookup(h1_arr[sel], h2_arr[sel], s1, s2, sk)
-                        idx = np.nonzero(sel)[0]
-                        kinds[idx] = np.where(maybe, got, -1)
+                kinds = _lookup_kinds(pdf, buckets_meta, storage)
                 if keep_arr is None:
                     keep = np.ones(len(pdf), dtype=bool)
                 else:

@@ -10,9 +10,9 @@ Scale posture per round (10^10-frontier discipline, SURVEY.md §7):
 - frontier/seen stay host-hash bucketed across rounds (store writes
   repartition by ``pmod(xxhash64(host), P)``)
 - seen-set membership is served by the persistent bucket-partitioned
-  SeenIndex (operators/seen_index.py): bloom probe + exact confirm
-  routed per url-hash bucket; the seen table itself never shuffles
-  and no bitmap is ever broadcast or driver-resident
+  SeenIndex (operators/seen_index.py): an exact 128-bit hash-pair
+  lookup routed per url-hash bucket; the seen table itself never
+  shuffles and no index data is ever broadcast or driver-resident
 - the index is maintained incrementally (each round appends one delta
   per touched bucket; compaction every k rounds — no rebuild scans)
 - candidate aggregation is salted two-phase (hot hosts / hot URLs)
@@ -158,22 +158,13 @@ class CrawlEngine:
         pages_path: str,
         robots_path: str | None = None,
         num_buckets: int = 32,
-        bloom_bits: int = 1 << 20,
     ) -> None:
         self.spark = spark
         self.store = store
         self.config = config
         self.num_buckets = num_buckets
-        # fixed bloom geometry for the crawl lifetime (bits per bucket
-        # bitmap); at 10^10 URLs size to ~9.6 bits/URL -> ~12 GB of
-        # bitmaps TOTAL, which is why nothing is broadcast: the
-        # SeenIndex stores one bitmap per url-hash bucket and the probe
-        # routes each bucket's bitmap only to that bucket's partitions
-        self.bloom_bits = bloom_bits
         self.seen_index = SeenIndex(
-            os.path.join(store.root, "seen_index"),
-            num_buckets=num_buckets,
-            bloom_bits=bloom_bits,
+            os.path.join(store.root, "seen_index"), num_buckets=num_buckets
         )
         # probe alignment: when num_buckets == spark.sql.shuffle
         # .partitions, the candidate agg's output partitioning IS the
@@ -285,16 +276,6 @@ class CrawlEngine:
         """
         spark, cfg = self.spark, self.config
         t0 = time.monotonic()
-        import os as _os
-
-        _timing = _os.environ.get("ATRA_PHASE_TIMING") == "1"
-        _last = [t0]
-
-        def _phase(name: str) -> None:
-            if _timing:
-                now = time.monotonic()
-                print(f"[phase] {name}: {now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
         frontier = self.store.read_snapshot(spark, "frontier")
         assert frontier is not None, "seed() first"
         n_polled = self.store.count_rows("frontier") or 0
@@ -407,10 +388,7 @@ class CrawlEngine:
         # and every later consumer (misses, deferred, admission log,
         # host_state) reads it warm. The former explicit sched.count()
         # here was one whole extra Spark job per round for state the
-        # next job materializes anyway (round-6 fixed-cost diet); with
-        # it gone the "admission" phase marker times plan construction
-        # only and the window's execution is charged to results_write.
-        _phase("admission")
+        # next job materializes anyway (round-6 fixed-cost diet).
 
         # misses = admitted URLs with no page row (fetch-error analog ->
         # InternalError, crawler.rs:608-622) — computed from the url
@@ -507,7 +485,6 @@ class CrawlEngine:
         finally:
             if cfg.extract_arrow_batch:
                 spark.conf.set(_arrow_bs_key, _prev_bs)
-        _phase("results_write")
         res_read = spark.read.parquet(results_path)
 
         # ---- link expansion from the committed links column (columnar
@@ -517,21 +494,12 @@ class CrawlEngine:
         # salted two-phase dedup to unique candidates w/ lowest depth
         candidates = aggregate_candidates(expanded)
 
-        # diagnostic sub-phase timing (OFF in benchmarks: the caches +
-        # counts change the plan): localizes non-scaling stages inside
-        # the frontier_write interval
-        _timing_fine = _timing and _os.environ.get("ATRA_PHASE_TIMING_FINE") == "1"
-        if _timing_fine:
-            candidates = candidates.cache()
-            print(f"[fine] candidates={candidates.count()}", flush=True)
-            _phase("fw:expand+dedup")
-
         # ---- seen-set membership (the core operator): bucket-routed
-        # bloom probe + exact confirm against the persistent SeenIndex.
+        # exact hash-pair lookup against the persistent SeenIndex.
         # The seen TABLE is not shuffled at all here — each task reads
-        # only its bucket's bitmap (and, on bloom hits, that bucket's
-        # hash-pair delta chain) from the store. aligned=True: the
-        # candidate agg above already hash-partitions by url with
+        # only its bucket's hash-pair delta chain from the store (LRU-
+        # cached per worker). aligned=True: the candidate agg above
+        # already hash-partitions by url with
         # P == num_buckets, which IS the index's bucket routing
         # (pmod(hash(url), B)), so the probe adds ZERO exchange — the
         # whole expand->dedup->seen-filter path is one shuffle ----
@@ -550,10 +518,6 @@ class CrawlEngine:
             "url",
             "host",
         ).filter(F.col("host").isNotNull())
-        if _timing_fine:
-            new_urls = new_urls.cache()
-            new_urls.count()
-            _phase("fw:probe+origin")
 
         # ---- state transitions for this round (batch MERGE): one
         # branch over the committed results (fetched -> Processed,
@@ -585,13 +549,12 @@ class CrawlEngine:
             frontier_next = frontier_next.unionByName(cooldown_deferred)
 
         # ---- commit the rest of the round: the frontier snapshot
-        # materializes the link-expansion + bloom-anti-join path exactly
+        # materializes the link-expansion + seen-anti-join path exactly
         # once; every later consumer of "new URLs" reads the committed
         # snapshot instead ----
         frontier_path = st.write_snapshot(
             "frontier", frontier_next, rnd + 1, bucket_by="host"
         )
-        _phase("frontier_write")
         new_from_snapshot = (
             spark.read.parquet(frontier_path)
             .filter(F.col("enqueue_round") == rnd + 1)
@@ -711,7 +674,6 @@ class CrawlEngine:
             self.seen_index.compact(spark)
             st.compact_table(spark, "seen", bucket_by="host")
             st.compact_table(spark, "host_state", bucket_by="host")
-        _phase("commit_pool")
 
         # driver-side stats from the tiny metrics snapshot (no Spark job)
         mt = st.read_small("metrics", rnd)
@@ -749,9 +711,9 @@ class CrawlEngine:
             start = self.store.latest_round("frontier") or 0
             if self.seen_index.committed_round != start:
                 # index out of date (crash between store commit and
-                # index publish, or a fresh engine over an old store):
-                # rebuild the membership cache from the committed seen
-                # table, exactly like the round-2 bloom rebuild
+                # index publish, a fresh engine over an old store, or an
+                # older on-disk index format): rebuild the membership
+                # cache from the committed seen table
                 seen = self.store.read_snapshot(self.spark, "seen")
                 if seen is not None:
                     self.seen_index.rebuild(seen.select("url", "kind"), start)

@@ -8,9 +8,9 @@ Modes:
   python bench_extra.py --plans name1,name2 --out plans/r06 --suffix before
       capture .explain("formatted") per query into <out>/<name>_<suffix>.txt
   python bench_extra.py --steady [--pages 50000]
-      one phase-timed steady-state round (ATRA_PHASE_TIMING=1).
+      one steady-state round.
   python bench_extra.py --crawl [--pages 50000]
-      full phase-timed crawl bench.
+      full crawl bench.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32).
@@ -77,7 +77,6 @@ def capture_plans(names: list[str], out_dir: str, suffix: str) -> None:
 
 
 def run_steady(pages: int) -> None:
-    os.environ.setdefault("ATRA_PHASE_TIMING", "1")
     import bench
 
     spark = _spark()
@@ -88,7 +87,6 @@ def run_steady(pages: int) -> None:
 
 
 def run_crawl(pages: int) -> None:
-    os.environ.setdefault("ATRA_PHASE_TIMING", "1")
     import bench
 
     spark = _spark()

@@ -296,7 +296,7 @@ class TestResume:
             )
 
         mk().run(seeds=fixture_set.seeds, max_rounds=2)
-        mk().run(seeds=None)  # fresh engine: blooms rebuilt from checkpoint
+        mk().run(seeds=None)  # fresh engine resumes from the checkpoint
         eng_seen = {
             r["url"]: r["kind"] for r in store.read_snapshot(spark, "seen").collect()
         }
@@ -306,6 +306,51 @@ class TestResume:
             for r in store.read_union(spark, "order").collect()
         )
         assert eng_order == sorted(oracle.order)
+
+    def test_v3_index_dir_rebuilds_on_resume(
+        self, spark, fixture_set, fixture_paths, oracle, tmp_path_factory
+    ):
+        """A seen-index directory in the older v3 layout (per-bucket
+        filter bitmaps next to the hash-pair chains) is dropped on open
+        and rebuilt from the committed seen table; the resumed crawl
+        still matches the oracle and leaves a parquet-only index."""
+        import json
+
+        store = CheckpointStore(str(tmp_path_factory.mktemp("resume_v3")), num_buckets=8)
+
+        def mk():
+            return CrawlEngine(
+                spark,
+                store,
+                fixture_set.config,
+                fixture_paths["pages"],
+                fixture_paths["robots"],
+                num_buckets=8,
+            )
+
+        mk().run(seeds=fixture_set.seeds, max_rounds=2)
+        root = os.path.join(store.root, "seen_index")
+        with open(os.path.join(root, "manifest.json")) as f:
+            m = json.load(f)
+        m["format"] = 3
+        m["bloom_bits"] = 1 << 20
+        for b, ent in m["buckets"].items():
+            ent["bloom"] = "bloom_r00002.bin"
+            with open(os.path.join(root, f"bucket={int(b):05d}", ent["bloom"]), "wb") as f:
+                f.write(b"\0" * 128)
+        with open(os.path.join(root, "manifest.json"), "w") as f:
+            json.dump(m, f)
+        eng = mk()
+        assert eng.seen_index.committed_round is None
+        eng.run(seeds=None)
+        eng_seen = {
+            r["url"]: r["kind"] for r in store.read_snapshot(spark, "seen").collect()
+        }
+        assert eng_seen == {u: k for u, (k, _, _) in oracle.seen.items()}
+        with open(os.path.join(root, "manifest.json")) as f:
+            assert "bloom" not in f.read()
+        files = [f for _d, _s, fs in os.walk(root) for f in fs if f != "manifest.json"]
+        assert files and all(f.endswith(".parquet") for f in files)
 
 
 class TestRecrawl:

@@ -45,7 +45,7 @@ def test_no_rdd_usage():
 
 
 def test_no_driver_side_collect_in_hot_path():
-    """collect() allowed only for per-round counters / bloom bitmaps —
+    """collect() allowed only for per-round counters / index summaries —
     crawl.py must not collect row data."""
     crawl = os.path.join(ENGINE_ROOT, "plans", "crawl.py")
     with open(crawl) as f:

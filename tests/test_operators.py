@@ -1,4 +1,4 @@
-"""Spark operator tests: bloom pruning, seen-merge semantics,
+"""Spark operator tests: seen-merge semantics,
 candidate aggregation, admission filters, politeness equivalence."""
 
 import datetime
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from atra_spark.config import CrawlConfig
-from atra_spark.operators import bloom as bloom_ops
 from atra_spark.operators.frontier import (
     filter_age,
     filter_blacklist,
@@ -30,41 +29,6 @@ TS = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
 
 def _seen_row(url, kind, host="h.example", lsk=KIND_UNSET, is_seed=False, d=(0, 0, 0)):
     return (url, host, kind, lsk, False, is_seed, TS, *d)
-
-
-class TestBloom:
-    def test_no_false_negatives_and_low_fp(self, spark):
-        n = 5000
-        df = spark.range(n).select(F.concat(F.lit("https://h/"), F.col("id")).alias("url"))
-        blooms = bloom_ops.build_bloom(df, num_buckets=8)
-        assert set(blooms) <= set(range(8))
-        # every member must hit
-        tagged = bloom_ops.bloom_maybe_contains(spark, df, blooms, num_buckets=8)
-        assert tagged.filter(~F.col("maybe_seen")).count() == 0
-        # non-members: fp rate well under 5%
-        other = spark.range(n).select(
-            F.concat(F.lit("https://other/"), F.col("id")).alias("url")
-        )
-        fp = (
-            bloom_ops.bloom_maybe_contains(spark, other, blooms, num_buckets=8)
-            .filter(F.col("maybe_seen"))
-            .count()
-        )
-        assert fp / n < 0.05
-
-    def test_prune_equals_plain_antijoin(self, spark):
-        seen = spark.range(3000).select(
-            F.concat(F.lit("https://h/"), F.col("id")).alias("url")
-        )
-        cands = spark.range(2000, 5000).select(
-            F.concat(F.lit("https://h/"), F.col("id")).alias("url")
-        )
-        blooms = bloom_ops.build_bloom(seen, num_buckets=8)
-        pruned = bloom_ops.prune_new_candidates(spark, cands, seen, blooms, num_buckets=8)
-        expected = cands.join(seen, on="url", how="left_anti")
-        assert sorted(r["url"] for r in pruned.collect()) == sorted(
-            r["url"] for r in expected.collect()
-        )
 
 
 class TestSeenMerge:

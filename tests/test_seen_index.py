@@ -1,14 +1,13 @@
 """SeenIndex: the persistent bucket-partitioned seen-set membership
-index (bloom probe + exact URL confirm, operators/seen_index.py).
+index (exact 128-bit hash-pair lookup, operators/seen_index.py).
 
 Contract under test (the RocksDB point-lookup analog,
 atra/src/recrawl_management/mod.rs:62 + link_state/db.rs):
-- prune_new(candidates) == candidates LEFT ANTI JOIN seen (exact, no
-  bloom false positives leak through: every bloom hit is confirmed
-  against the bucket's URL delta chain)
-- incremental: each round appends ONE delta per touched bucket; the
-  bloom bitmap is rewritten only for touched buckets; nothing is ever
-  rebuilt from scratch in the normal path
+- prune_new(candidates) == candidates LEFT ANTI JOIN seen (exact:
+  every candidate is looked up in its bucket's hash-pair delta chain)
+- incremental: each round appends ONE delta per touched bucket and
+  rewrites nothing else; nothing is ever rebuilt from scratch in the
+  normal path
 - persistent: a fresh SeenIndex over the same directory serves the
   same answers (resume contract)
 - plan shape: the probe plan contains NO BroadcastExchange and no
@@ -60,7 +59,7 @@ NEW = [f"https://n{i}.example/q{j}" for i in range(5) for j in range(30)]
 
 class TestSeenIndexCorrectness:
     def test_prune_matches_exact_antijoin(self, spark, tmp_path):
-        idx = SeenIndex(str(tmp_path / "si"), num_buckets=8, bloom_bits=1 << 14)
+        idx = SeenIndex(str(tmp_path / "si"), num_buckets=8)
         idx.add_urls(_urls_df(spark, SEEN), 0)
         idx.commit()
         cands = _cands_df(spark, SEEN[::3] + NEW)  # mix seen + new
@@ -70,25 +69,15 @@ class TestSeenIndexCorrectness:
         row = idx.prune_new(cands).filter(F.col("url") == NEW[0]).collect()[0]
         assert row["host"].endswith(".example") and row["total_distance_to_seed"] >= 0
 
-    def test_no_false_positive_leaks_with_tiny_bloom(self, spark, tmp_path):
-        """A deliberately undersized bloom (64 bits/bucket for 280
-        URLs) makes almost every probe a 'maybe' — the exact confirm
-        must still yield a perfect anti-join."""
-        idx = SeenIndex(str(tmp_path / "si"), num_buckets=4, bloom_bits=64)
-        idx.add_urls(_urls_df(spark, SEEN), 0)
-        idx.commit()
-        got = sorted(r["url"] for r in idx.prune_new(_cands_df(spark, SEEN + NEW)).collect())
-        assert got == sorted(NEW)
-
     def test_incremental_rounds_and_persistence(self, spark, tmp_path):
         root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=8, bloom_bits=1 << 14)
+        idx = SeenIndex(root, num_buckets=8)
         idx.add_urls(_urls_df(spark, SEEN[:100]), 0)
         idx.commit()
         idx.add_urls(_urls_df(spark, SEEN[100:]), 1)
         idx.commit()
         # fresh instance over the same dir (resume)
-        idx2 = SeenIndex(root, num_buckets=8, bloom_bits=1 << 14)
+        idx2 = SeenIndex(root, num_buckets=8)
         assert idx2.committed_round == 1
         got = sorted(r["url"] for r in idx2.prune_new(_cands_df(spark, SEEN + NEW)).collect())
         assert got == sorted(NEW)
@@ -96,30 +85,22 @@ class TestSeenIndexCorrectness:
     def test_uncommitted_round_is_invisible(self, spark, tmp_path):
         """A crashed round (files written, manifest not committed) must
         not drop candidates: probes serve the last committed manifest."""
-        idx = SeenIndex(str(tmp_path / "si"), num_buckets=4, bloom_bits=1 << 12)
+        idx = SeenIndex(str(tmp_path / "si"), num_buckets=4)
         idx.add_urls(_urls_df(spark, SEEN[:50]), 0)
         idx.commit()
         idx.add_urls(_urls_df(spark, SEEN[50:100]), 1)  # NOT committed
         got = {r["url"] for r in idx.prune_new(_cands_df(spark, SEEN[:100])).collect()}
         assert got == set(SEEN[50:100])
 
-    def test_geometry_mismatch_raises(self, tmp_path, spark):
-        root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 12)
-        idx.add_urls(_urls_df(spark, SEEN[:10]), 0)
-        idx.commit()
-        with pytest.raises(ValueError, match="geometry"):
-            SeenIndex(root, num_buckets=4, bloom_bits=1 << 13)
-
 
 class TestSeenIndexIncrementality:
     def test_delta_files_per_round_not_per_corpus(self, spark, tmp_path):
         """The write cost of round N is proportional to round N's new
         URLs, not |seen| (VERDICT r2 'What's wrong' #2): each round
-        adds at most one delta file per touched bucket and rewrites
-        only touched buckets' bitmaps."""
+        adds exactly one delta parquet to each touched bucket and
+        rewrites nothing."""
         root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 14)
+        idx = SeenIndex(root, num_buckets=4)
         idx.add_urls(_urls_df(spark, SEEN), 0)
         idx.commit()
 
@@ -136,7 +117,7 @@ class TestSeenIndexIncrementality:
         changed = [b for b in after if after[b] != before.get(b, [])]
         assert len(changed) == 1  # one bucket touched
         new_files = set(after[changed[0]]) - set(before[changed[0]])
-        assert {f.split(".")[-1] for f in new_files} == {"bin", "parquet"}
+        assert new_files == {"hashes_r00001.parquet"}
         # untouched buckets: byte-identical file lists (no rewrite)
         for b in after:
             if b != changed[0]:
@@ -144,7 +125,7 @@ class TestSeenIndexIncrementality:
 
     def test_compaction_merges_chain_and_keeps_answers(self, spark, tmp_path):
         root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 14)
+        idx = SeenIndex(root, num_buckets=4)
         for rnd in range(4):
             idx.add_urls(_urls_df(spark, SEEN[rnd * 70 : (rnd + 1) * 70]), rnd)
             idx.commit()
@@ -161,7 +142,7 @@ class TestSeenIndexPlanShape:
         broadcast bitmaps (no BroadcastExchange at all) and must not
         join/shuffle a seen relation — one exchange on the bucket
         column into one mapInPandas."""
-        idx = SeenIndex(str(tmp_path / "si"), num_buckets=8, bloom_bits=1 << 14)
+        idx = SeenIndex(str(tmp_path / "si"), num_buckets=8)
         idx.add_urls(_urls_df(spark, SEEN), 0)
         idx.commit()
         plan = idx.prune_new(_cands_df(spark, NEW))._jdf.queryExecution().executedPlan().toString()
@@ -171,8 +152,9 @@ class TestSeenIndexPlanShape:
         assert "MapInPandas" in plan
 
     def test_driver_holds_no_bitmaps(self, spark, tmp_path):
-        """Driver residency is file NAMES only, never bitmap bytes."""
-        idx = SeenIndex(str(tmp_path / "si"), num_buckets=8, bloom_bits=1 << 14)
+        """Driver residency is file NAMES only, never index bytes, and
+        the bucket layout is parquet deltas only."""
+        idx = SeenIndex(str(tmp_path / "si"), num_buckets=8)
         idx.add_urls(_urls_df(spark, SEEN), 0)
         idx.commit()
         import json
@@ -180,7 +162,11 @@ class TestSeenIndexPlanShape:
         # the whole manifest (the only driver-side state) is tiny
         blob = json.dumps(idx._manifest)
         assert len(blob) < 8192
-        assert "bloom_r" in blob and ".parquet" in blob
+        assert "bloom" not in blob
+        for ent in idx._manifest["buckets"].values():
+            assert all(d.endswith(".parquet") for d in ent["deltas"])
+        for b in range(8):
+            assert all(f.endswith(".parquet") for f in idx.storage.list_bucket(b))
 
 
 class TestFormatMigration:
@@ -193,7 +179,7 @@ class TestFormatMigration:
         import os
 
         root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 12)
+        idx = SeenIndex(root, num_buckets=4)
         idx.add_urls(_urls_df(spark, SEEN[:20]), 0)
         idx.commit()
         # simulate the older on-disk format
@@ -202,7 +188,7 @@ class TestFormatMigration:
         m["format"] = 1
         with open(os.path.join(root, "manifest.json"), "w") as f:
             json.dump(m, f)
-        idx2 = SeenIndex(root, num_buckets=4, bloom_bits=1 << 12)
+        idx2 = SeenIndex(root, num_buckets=4)
         assert idx2.committed_round is None  # engine will rebuild()
         idx2.rebuild(_urls_df(spark, SEEN[:20]), 0)
         got = sorted(r["url"] for r in idx2.prune_new(_cands_df(spark, SEEN[:40])).collect())
@@ -229,7 +215,7 @@ class TestStateLookup:
 
         rng = random.Random(7)
         urls = [f"https://h{i % 9}.example/p{i}" for i in range(120)]
-        idx = SeenIndex(str(tmp_path / "si_state"), num_buckets=8, bloom_bits=1 << 14)
+        idx = SeenIndex(str(tmp_path / "si_state"), num_buckets=8)
         state: dict[str, int] = {}
         for rnd in range(3):
             rows = []
@@ -287,7 +273,7 @@ class TestStateLookup:
         compaction must preserve the folded (latest) kind."""
         from atra_spark.schemas import KIND_DISCOVERED, KIND_PROCESSED_AND_STORED
 
-        idx = SeenIndex(str(tmp_path / "si_fold"), num_buckets=4, bloom_bits=1 << 12)
+        idx = SeenIndex(str(tmp_path / "si_fold"), num_buckets=4)
         idx.add_urls(
             spark.createDataFrame(
                 [(u, KIND_DISCOVERED) for u in SEEN[:30]], "url string, kind int"
@@ -328,7 +314,7 @@ class TestStateLookup:
         """The state lookup keeps prune_new's plan economics: no
         broadcast, no join against a seen relation, one exchange into
         one mapInPandas."""
-        idx = SeenIndex(str(tmp_path / "si_plan"), num_buckets=8, bloom_bits=1 << 14)
+        idx = SeenIndex(str(tmp_path / "si_plan"), num_buckets=8)
         idx.add_urls(_urls_df(spark, SEEN), 0)
         idx.commit()
         plan = (
@@ -350,10 +336,10 @@ class TestBucketGeometryMigration:
         re-crawled): the constructor drops the cache so the engine's
         resume path rebuilds under the requested geometry."""
         root = str(tmp_path / "si_nb")
-        idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 12)
+        idx = SeenIndex(root, num_buckets=4)
         idx.add_urls(_urls_df(spark, SEEN[:20]), 0)
         idx.commit()
-        idx2 = SeenIndex(root, num_buckets=8, bloom_bits=1 << 12)
+        idx2 = SeenIndex(root, num_buckets=8)
         assert idx2.committed_round is None  # engine will rebuild()
         idx2.rebuild(_urls_df(spark, SEEN[:20]), 0)
         got = sorted(r["url"] for r in idx2.prune_new(_cands_df(spark, SEEN[:40])).collect())
@@ -362,24 +348,28 @@ class TestBucketGeometryMigration:
     def test_old_format_with_different_bloom_bits_resets_not_raises(
         self, spark, tmp_path
     ):
-        """The format check must run BEFORE the bloom-geometry check: a
-        stale-format manifest whose bloom_bits also differ auto-migrates
-        instead of raising (ADVICE r3)."""
+        """A v3 manifest (per-bucket filter bitmaps: ``bloom_bits`` plus a
+        ``bloom`` file per bucket) is an older format: it auto-migrates
+        through the reset path instead of raising (ADVICE r3)."""
         import json as _json
         import os as _os
 
         root = str(tmp_path / "si_fmt_bits")
-        idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 12)
+        idx = SeenIndex(root, num_buckets=4)
         idx.add_urls(_urls_df(spark, SEEN[:10]), 0)
         idx.commit()
         with open(_os.path.join(root, "manifest.json")) as f:
             m = _json.load(f)
-        m["format"] = 1
-        m["bloom_bits"] = 1 << 10  # both stale format AND different m
+        m["format"] = 3
+        m["bloom_bits"] = 1 << 10
+        for b, ent in m["buckets"].items():
+            ent["bloom"] = "bloom_r00000.bin"
+            idx.storage.write_bytes(int(b), "bloom_r00000.bin", b"\0" * 128)
         with open(_os.path.join(root, "manifest.json"), "w") as f:
             _json.dump(m, f)
-        idx2 = SeenIndex(root, num_buckets=4, bloom_bits=1 << 12)  # no raise
+        idx2 = SeenIndex(root, num_buckets=4)  # no raise
         assert idx2.committed_round is None
+        assert all(not idx2.storage.list_bucket(b) for b in range(4))
 
 
 class TestStorageSeamAndDistributedCompact:
@@ -393,7 +383,7 @@ class TestStorageSeamAndDistributedCompact:
         roots = {}
         for mode in ("driver", "dist"):
             root = str(tmp_path / f"si_{mode}")
-            idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 14)
+            idx = SeenIndex(root, num_buckets=4)
             for rnd in range(4):
                 rows = [
                     (u, KIND_PROCESSED_AND_STORED if rnd == 3 and i % 2 else KIND_DISCOVERED)
@@ -426,7 +416,7 @@ class TestStorageSeamAndDistributedCompact:
         from atra_spark.schemas import KIND_DISCOVERED, KIND_PROCESSED_AND_STORED
 
         root = str(tmp_path / "si_kindc")
-        idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 12)
+        idx = SeenIndex(root, num_buckets=4)
         idx.add_urls(
             spark.createDataFrame(
                 [(u, KIND_DISCOVERED) for u in SEEN[:40]], "url string, kind int"
@@ -451,30 +441,21 @@ class TestStorageSeamAndDistributedCompact:
         """No direct file I/O outside the seam: a storage subclass that
         counts calls sees every read the probe makes."""
         from atra_spark.operators.seen_index import (
-            _BLOOM_CACHE,
             _HASHSET_CACHE,
             LocalBucketStorage,
         )
 
-        calls = {"read_bytes": 0, "read_pairs": 0}
+        calls = {"read_pairs": 0}
 
         class CountingStorage(LocalBucketStorage):
-            def read_bytes(self, bucket, name):
-                calls["read_bytes"] += 1
-                return super().read_bytes(bucket, name)
-
             def read_pairs(self, bucket, name):
                 calls["read_pairs"] += 1
                 return super().read_pairs(bucket, name)
 
         root = str(tmp_path / "si_count")
-        idx = SeenIndex(
-            root, num_buckets=4, bloom_bits=64,  # tiny bloom -> exact confirms
-            storage=CountingStorage(root),
-        )
+        idx = SeenIndex(root, num_buckets=4, storage=CountingStorage(root))
         idx.add_urls(_urls_df(spark, SEEN[:60]), 0)
         idx.commit()
-        _BLOOM_CACHE.clear()
         _HASHSET_CACHE.clear()
         got = idx.prune_new(_cands_df(spark, SEEN[:60] + NEW[:20])).collect()
         assert sorted(r["url"] for r in got) == sorted(NEW[:20])
@@ -493,7 +474,7 @@ class TestTwoPhaseCompaction:
 
     def test_bucket_fold_is_write_only(self, spark, tmp_path):
         root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=2, bloom_bits=1 << 14)
+        idx = SeenIndex(root, num_buckets=2)
         for rnd in range(3):
             idx.add_urls(_urls_df(spark, SEEN[rnd * 50 : (rnd + 1) * 50]), rnd)
             idx.commit()
@@ -501,12 +482,11 @@ class TestTwoPhaseCompaction:
         # executor tasks do), no manifest publish, no GC
         for b, ent in idx._manifest["buckets"].items():
             SeenIndex._compact_bucket(
-                idx.storage, int(b), list(ent["deltas"]),
-                "hashes_base_r00002.parquet", {ent["bloom"]}, 2,
+                idx.storage, int(b), list(ent["deltas"]), "hashes_base_r00002.parquet"
             )
         # the committed manifest's chain files must all still exist -> a
         # fresh index over the same root probes correctly
-        idx2 = SeenIndex(root, num_buckets=2, bloom_bits=1 << 14)
+        idx2 = SeenIndex(root, num_buckets=2)
         got = sorted(
             r["url"] for r in idx2.prune_new(_cands_df(spark, SEEN[:150] + NEW)).collect()
         )
@@ -514,7 +494,7 @@ class TestTwoPhaseCompaction:
 
     def test_gc_after_publish_leaves_no_orphans(self, spark, tmp_path):
         root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=2, bloom_bits=1 << 14)
+        idx = SeenIndex(root, num_buckets=2)
         for rnd in range(3):
             idx.add_urls(_urls_df(spark, SEEN[rnd * 50 : (rnd + 1) * 50]), rnd)
             idx.commit()
