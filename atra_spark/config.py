@@ -7,7 +7,6 @@ round loop. Defaults mirror the reference defaults where they exist.
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import asdict, dataclass, field
 
 from .urlkit import NORMAL, Budget
@@ -40,12 +39,6 @@ class CrawlConfig:
     max_rounds: int = 32
     user_agent: str = "atra-spark/0.1"
 
-    # politeness scheduler implementation: the JVM window function
-    # (default, whole-stage codegen) or the grouped applyInPandas
-    # stateful scheduler — identical admissions (pytest-verified),
-    # the pandas path also stamps per-host scheduled fetch offsets
-    use_pandas_scheduler: bool = False
-
     # write the order/edges audit tables (crawl-ordering parity + web
     # graph). Disable for pure-throughput runs; results/seen/frontier/
     # metrics are always written (resumability + lineage).
@@ -72,36 +65,6 @@ class CrawlConfig:
     # partitions by host anyway, so the shuffled shape reuses the
     # exchange instead of shipping the relation to every executor.
     broadcast_robots_max_hosts: int = 10_000_000
-
-    # Arrow batch size override for the EXTRACTION job only (the one
-    # stage that streams full page payloads through Python); 0 (the
-    # default) keeps the session-wide small batches. Measured both ways
-    # at 480k pages/16 cores: each JVM<->Python batch round-trip costs
-    # ~45 ms regardless of size, and 8192-row (~57 MB) batches cut an
-    # isolated extraction stage 12% in a calm-DRAM window — but at
-    # ROUND level they lost 20-55% in four interleaved trials, because
-    # 3.5 MB batches stay cache-resident across the convert+extract
-    # passes while 57 MB batches stream through DRAM (this box's
-    # bandwidth anti-scales past ~8 cores and is often contended). Kept
-    # as a knob because the tradeoff flips on cache-rich/calm hardware.
-    extract_arrow_batch: int = field(
-        default_factory=lambda: int(os.environ.get("ATRA_EXTRACT_ARROW_BATCH", "0"))
-    )
-
-    # AQE inside the round loop. The round's plan shapes are statically
-    # partitioned and skew-guarded by construction — host-hash bucketed
-    # state, per-host admission bounded by k(host), broadcast fetch
-    # join, bucket-aligned seen probe — so adaptive re-planning has
-    # nothing to improve, and its per-query-stage materialization
-    # barriers cost real wall time on short stages (measured at 480k
-    # pages, cpuset-pinned 16 cores: round 134.3 s with AQE vs 123.1 s
-    # without; the whole saving is barrier latency, zero plan changes).
-    # Scoped: the engine flips spark.sql.adaptive.enabled only for the
-    # duration of run_round and restores the session value after, so
-    # analytics queries on the same session keep AQE (skew joins etc.).
-    aqe_in_round: bool = field(
-        default_factory=lambda: os.environ.get("ATRA_AQE_IN_ROUND", "0") == "1"
-    )
 
     def budget_for(self, host: str) -> Budget:
         return self.per_host_budget.get(host, self.default_budget)

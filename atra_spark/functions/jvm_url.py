@@ -40,7 +40,7 @@ def _psl_exact_df(spark: SparkSession) -> DataFrame:
     attach_origin runs once per crawl round; rebuilding this local
     relation each time re-serializes 9.4k tuples through py4j on the
     DRIVER — measured ~1 s of per-round serial wall that a 16-core leg
-    pays at the same price as a 4-core leg (scripts/fixed_cost_probe).
+    pays at the same price as a 4-core leg.
     The cached plan is a deterministic LocalRelation, so reuse is safe
     across rounds and jobs within a session."""
     key = id(spark)

@@ -16,8 +16,7 @@ Scale posture per round (10^10-frontier discipline, SURVEY.md §7):
 - the index is maintained incrementally (each round appends one delta
   per touched bucket; compaction every k rounds — no rebuild scans)
 - candidate aggregation is salted two-phase (hot hosts / hot URLs)
-- admission is a JVM window function; the applyInPandas scheduler is
-  the stateful variant (equivalence pytest-verified)
+- admission is a JVM window function over host (no Python stage)
 """
 
 from __future__ import annotations
@@ -50,7 +49,7 @@ from ..operators.frontier import (
     filter_state_indexed,
     parse_robots,
 )
-from ..operators.politeness import admit_window, schedule_hosts
+from ..operators.politeness import admit_window
 from ..operators.seen import aggregate_candidates
 
 
@@ -246,17 +245,17 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
     def run_round(self, rnd: int) -> RoundStats:
-        """One crawl round, with AQE scoped off for its duration unless
-        ``config.aqe_in_round`` — the round's plans are statically
-        partitioned and skew-guarded by construction (see CrawlConfig),
-        so adaptive re-planning only adds query-stage barrier latency
-        (measured: 134.3 s -> 123.1 s at 480k pages / 16 pinned cores).
-        The session value is restored afterwards so analytics queries
-        keep AQE."""
+        """One crawl round, with AQE scoped off for its duration. The
+        round's plans are statically partitioned and skew-guarded by
+        construction — host-hash bucketed state, per-host admission
+        bounded by k(host), broadcast fetch join, bucket-aligned seen
+        probe — so adaptive re-planning changes no plan and only adds
+        query-stage barrier latency (measured: 134.3 s -> 123.1 s at
+        480k pages / 16 pinned cores). The session value is restored
+        afterwards so analytics queries on the same session keep AQE."""
         _aqe_key = "spark.sql.adaptive.enabled"
         _prev_aqe = self.spark.conf.get(_aqe_key)
-        if not self.config.aqe_in_round:
-            self.spark.conf.set(_aqe_key, "false")
+        self.spark.conf.set(_aqe_key, "false")
         try:
             return self._run_round_inner(rnd)
         finally:
@@ -298,15 +297,14 @@ class CrawlEngine:
         eligible = filter_budget(eligible, cfg)
         if cfg.respect_robots_txt and self.robots_parsed is not None:
             # keep_delay: crawl_delay_ms rides this join, so the
-            # politeness scheduler below skips its own robots join —
+            # admission window below skips its own robots join —
             # one robots join/broadcast build per round instead of two
             eligible = filter_robots(
                 eligible, self.robots_parsed, broadcast=self._robots_broadcast,
                 keep_delay=True,
             )
 
-        scheduler = schedule_hosts if cfg.use_pandas_scheduler else admit_window
-        sched = scheduler(
+        sched = admit_window(
             eligible,
             self.robots_parsed,
             default_delay_ms=cfg.delay_ms,
@@ -466,25 +464,11 @@ class CrawlEngine:
 
         # ---- commit the results snapshot: THE single extraction pass
         # of the round (scan -> decode -> extract -> write; nothing
-        # cached, nothing computed twice). This job streams the full
-        # page payload through the Python extractor, so it runs with
-        # the LARGE Arrow batch size (config.extract_arrow_batch — the
-        # per-batch JVM<->Python round-trip is ~45 ms regardless of
-        # size) while every other pandas stage keeps the small session
-        # default; the conf is runtime-scoped per action, restored
-        # before the frontier path ----
+        # cached, nothing computed twice) ----
         st = self.store
-        _arrow_bs_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        _prev_bs = spark.conf.get(_arrow_bs_key)
-        if cfg.extract_arrow_batch:
-            spark.conf.set(_arrow_bs_key, str(cfg.extract_arrow_batch))
-        try:
-            results_path = st.write_snapshot(
-                "results", results.unionByName(miss_results), rnd
-            )
-        finally:
-            if cfg.extract_arrow_batch:
-                spark.conf.set(_arrow_bs_key, _prev_bs)
+        results_path = st.write_snapshot(
+            "results", results.unionByName(miss_results), rnd
+        )
         res_read = spark.read.parquet(results_path)
 
         # ---- link expansion from the committed links column (columnar

@@ -54,13 +54,9 @@ def get_spark(
         # window, but lost 20-55% at round level in four interleaved
         # trials — 3.5 MB batches stay cache-resident across the
         # convert+extract passes while ~57 MB batches stream through
-        # this box's contended, anti-scaling DRAM. Small stays the
-        # default; CrawlConfig.extract_arrow_batch can override the
-        # extraction job per-stage on cache-rich hardware.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("ATRA_ARROW_BATCH", "512"),
-        )
+        # this box's contended, anti-scaling DRAM. One size for every
+        # pandas stage, extraction included.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.sql.parquet.filterPushdown", "true")
         # pages-scan split size: extraction is Python-CPU-heavy (~10-50x
         # a plain scan per byte), so scan tasks must be much smaller
@@ -75,23 +71,12 @@ def get_spark(
         # instead, which is faster here). Cluster deploys size executor
         # memory via spark-submit.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("ATRA_PARQUET_CODEC", "snappy"),
-        )
+        # zstd measured no change vs snappy (BENCH/BASELINE.md)
+        .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     if extra_conf:
         for k, v in extra_conf.items():
             b = b.config(k, v)
-    # experiment hook: ATRA_SPARK_CONF="k=v;k2=v2" overrides any of the
-    # defaults above for a single invocation (used by bench A/Bs; never
-    # set in the shipped protocol unless BASELINE.md documents it)
-    env_conf = os.environ.get("ATRA_SPARK_CONF")
-    if env_conf:
-        for pair in env_conf.split(";"):
-            if pair.strip():
-                k, _, v = pair.partition("=")
-                b = b.config(k.strip(), v.strip())
     return b.getOrCreate()

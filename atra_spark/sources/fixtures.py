@@ -490,7 +490,7 @@ def write_fixtures(fx: FixtureSet, out_dir: str) -> dict[str, str]:
     return paths
 
 
-FIXTURE_FORMAT_VERSION = 4  # bump to invalidate cached fixture dirs
+FIXTURE_FORMAT_VERSION = 5  # bump to invalidate cached fixture dirs
 
 
 def ensure_fixtures(

@@ -13,7 +13,7 @@ Modes:
       full crawl bench.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on).
 """
 
 from __future__ import annotations
@@ -27,10 +27,14 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 
+def _cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+
+
 def _spark():
     from atra_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     return get_spark("atra-bench-extra", cores=cpus, shuffle_partitions=cpus)
 
 
@@ -90,7 +94,7 @@ def run_crawl(pages: int) -> None:
     import bench
 
     spark = _spark()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     sec, fetched = bench.crawl_bench(spark, pages, cpus)
     print(json.dumps({"crawl_sec": round(sec, 3), "fetched": fetched,
                       "urls_per_sec": round(fetched / sec, 1)}))

@@ -10,7 +10,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from atra_spark.session import get_spark
 
-    s = get_spark("atra-tests", cores=8, shuffle_partitions=8)
+    # cores from $SPARK_GRAFT_CPUS (else all local cores); 8 shuffle
+    # partitions stay fixed so they line up with the tests' num_buckets=8
+    s = get_spark("atra-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -104,6 +104,13 @@ class TestParity:
             if rs.admitted:
                 assert per_round[rs.round] == rs.fetched_ok
 
+    def test_host_state_maintained(self, spark, crawled):
+        store, _ = crawled
+        hs = store.read_snapshot(spark, "host_state")
+        assert set(hs.columns) == {"host", "last_access", "crawl_delay_ms"}
+        admitted_hosts = {r["host"] for r in store.read_union(spark, "order").collect()}
+        assert {r["host"] for r in hs.collect()} == admitted_hosts
+
     def test_blocked_and_private_never_crawled(self, spark, crawled):
         store, _ = crawled
         order = store.read_union(spark, "order")
@@ -476,36 +483,6 @@ class TestRecrawl:
         store.write_snapshot("host_state", host_state2, 1, bucket_by="host")
         stats2 = eng.run_round(1)
         assert stats2.admitted == 1 and stats2.fetched_ok == 1
-
-
-class TestPandasSchedulerPath:
-    """The applyInPandas politeness scheduler (north-star shape) must
-    reproduce the oracle exactly, like the window path."""
-
-    def test_full_parity_with_pandas_scheduler(
-        self, spark, fixture_set, fixture_paths, oracle, tmp_path_factory
-    ):
-        import dataclasses
-
-        from atra_spark.sources.store import CheckpointStore
-
-        cfg = dataclasses.replace(fixture_set.config, use_pandas_scheduler=True)
-        store = CheckpointStore(str(tmp_path_factory.mktemp("pands")), num_buckets=8)
-        eng = CrawlEngine(
-            spark, store, cfg, fixture_paths["pages"], fixture_paths["robots"], num_buckets=8
-        )
-        eng.run(seeds=fixture_set.seeds)
-        eng_seen = {r["url"]: r["kind"] for r in store.read_snapshot(spark, "seen").collect()}
-        assert eng_seen == {u: k for u, (k, _, _) in oracle.seen.items()}
-        eng_order = sorted(
-            (r["round"], r["host"], r["admission_index"], r["url"])
-            for r in store.read_union(spark, "order").collect()
-        )
-        assert eng_order == sorted(oracle.order)
-        # host_state table maintained (audit mode)
-        hs = store.read_snapshot(spark, "host_state")
-        assert hs is not None and hs.count() > 0
-        assert set(hs.columns) == {"host", "last_access", "crawl_delay_ms"}
 
 
 class TestFetchJoinFallback:

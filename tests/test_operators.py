@@ -1,5 +1,5 @@
 """Spark operator tests: seen-merge semantics,
-candidate aggregation, admission filters, politeness equivalence."""
+candidate aggregation, admission filters, politeness admission."""
 
 import datetime
 
@@ -14,7 +14,7 @@ from atra_spark.operators.frontier import (
     filter_robots,
     parse_robots,
 )
-from atra_spark.operators.politeness import admit_window, schedule_hosts
+from atra_spark.operators.politeness import admit_window
 from atra_spark.operators.seen import aggregate_candidates, merge_seen
 from atra_spark.schemas import (
     KIND_DISCOVERED,
@@ -215,18 +215,8 @@ class TestPoliteness:
         rest = [(r[3], r[1]) for r in rows[1:]]
         assert rest == sorted(rest)
 
-    def test_apply_in_pandas_equals_window(self, spark):
-        f, r = self._frontier(spark), self._robots(spark)
-        a = schedule_hosts(f, r, 1000, 10_000)
-        b = admit_window(f, r, 1000, 10_000)
-        key = lambda df: sorted(
-            (x["url"], x["admitted"], x["admission_index"], x["scheduled_offset_ms"])
-            for x in df.collect()
-        )
-        assert key(a) == key(b)
-
     def test_scheduled_offsets_are_interval_ticks(self, spark):
-        sched = schedule_hosts(self._frontier(spark), self._robots(spark), 1000, 10_000)
+        sched = admit_window(self._frontier(spark), self._robots(spark), 1000, 10_000)
         slow = sched.filter(F.col("host") == "slow.example").collect()
         offs = sorted(r["scheduled_offset_ms"] for r in slow)
         assert offs == [0, 2000, 4000]

@@ -454,3 +454,28 @@ class TestExpireContractRegressions:
             store.expire_snapshots("results", keep_last_n=1)
         # all rounds intact
         assert [s["round"] for s in store._load_manifest("results")["snapshots"]] == [1, 2, 3]
+
+
+def test_fixture_cache_from_older_format_regenerates(tmp_path):
+    """A cached fixture dir written under an older format marker holds a
+    config.json with fields CrawlConfig no longer has; ensure_fixtures
+    must regenerate it rather than hand that file to from_json (which
+    rejects unknown keys instead of dropping them)."""
+    import json
+
+    from atra_spark.config import CrawlConfig
+    from atra_spark.sources.fixtures import FIXTURE_FORMAT_VERSION, ensure_fixtures
+
+    out = tmp_path / "fx"
+    out.mkdir()
+    (out / f".done_v{FIXTURE_FORMAT_VERSION - 1}_20_2_1_5-30").write_text("ok")
+    stale = json.loads(CrawlConfig().to_json())
+    stale["retired_option"] = False
+    (out / "config.json").write_text(json.dumps(stale))
+    with pytest.raises(TypeError):
+        CrawlConfig.from_json((out / "config.json").read_text())
+
+    paths = ensure_fixtures(str(out), n_pages=20, n_hosts=2)
+    with open(paths["config"]) as f:
+        cfg = CrawlConfig.from_json(f.read())
+    assert cfg.blacklist  # the fixture config, not the default
