@@ -159,11 +159,6 @@ def repetition_metrics(
     )
 
 
-def doc_fingerprint_col(text: F.Column) -> F.Column:
-    """md5 over whitespace-normalized lowercased text."""
-    return F.md5(F.regexp_replace(F.lower(text), r"\s+", " "))
-
-
 # ---------------------------------------------------------------------------
 # language ID: marker-word counting, JVM-side (the vectorized-Python
 # variant lives in langdata.detect_lang and runs inside extraction)

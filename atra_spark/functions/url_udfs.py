@@ -12,7 +12,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from ..urlkit import canonicalize, clean_url, host_of, origin
+from ..urlkit import canonicalize, origin
 
 
 @F.pandas_udf(StringType())
@@ -21,25 +21,5 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(StringType())
-def canonicalize_with_base_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            canonicalize(u, base=b) if u is not None else None
-            for u, b in zip(urls, bases)
-        ]
-    )
-
-
-@F.pandas_udf(StringType())
-def clean_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: clean_url(u) if u is not None else None)
-
-
-@F.pandas_udf(StringType())
 def origin_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: origin(u) if u is not None else None)
-
-
-@F.pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: host_of(u) if u is not None else None)

@@ -17,28 +17,29 @@ Leskovec-Rajaraman-Ullman ch. 3 (the identical sketch family as
 functions/dedup.minhash_lsh_candidates, so in-batch and cross-batch
 dedup agree on what "near" means).
 
-Design (mirrors SeenIndex, key differences called out):
+Design: the same bucket-chain engine as the SeenIndex
+(operators/bucket_chain.py), with band rows as the chain contents:
 
-- State = per-bucket parquet delta chains under a BucketStorage seam
-  (LocalBucketStorage / FlatObjectBucketStorage — the same object-store
-  abstraction as the SeenIndex). A band row is
+- State = per-bucket parquet delta chains. A band row is
   ``(bkey, id, h0..h{H-1})``: ``bkey = xxhash64(band, h_i.., salt)``
   routes the row; the full signature RIDES ALONG so candidate
   verification is a vectorized in-bucket compare — no second index
   round-trip per candidate (the storage trade: H extra int64 per band
-  row, bought back by never touching a signature store on probe).
+  row, bought back by never touching a signature store on probe). The
+  chain fold is a stable sort by bkey (``_sort_by_bkey``).
 - Probe = ONE exchange of the batch's band rows on
   ``pmod(bkey, num_buckets)`` + one applyInPandas pass: each task
-  loads only ITS bucket's delta chain (worker-local LRU with
-  chain-prefix reuse — a warm probe reads exactly the newest delta
-  file), binary-searches the sorted bkey column, and counts equal
-  signature components per candidate. Nothing corpus-sized is ever
-  shuffled or re-read.
+  loads only ITS bucket's folded chain (the worker-local chain-prefix
+  LRU — a warm probe reads exactly the newest delta file),
+  binary-searches the sorted bkey column, and counts equal signature
+  components per candidate. Nothing corpus-sized is ever shuffled or
+  re-read.
 - Admission is staged-then-committed exactly like SeenIndex rounds:
   ``admit()`` writes immutable per-bucket deltas and stages a manifest;
   ``commit()`` publishes it atomically AFTER the caller's own corpus
   commit, so a crashed batch can never flag future documents as dups
-  of documents that were never stored.
+  of documents that were never stored. A replayed batch (streaming
+  foreachBatch retry) rewrites its delta, which joins the chain once.
 - ``compact()`` folds each bucket's chain into one sorted base file
   (per-bucket, incremental — never a global rewrite).
 
@@ -62,97 +63,28 @@ task.
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import re
-import shutil
-import tempfile
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from .seen_index import _cache_put, _default_storage
+from .bucket_chain import BucketChainStore, Columns, load_chain
 
 _FORMAT = "neardup-bands-v1"
 _BUCKET_COL = "__ndx_bucket"
-
-# worker-local probe cache: storage.key(bucket) -> (chain, bkey-sorted
-# column arrays). Chain-PREFIX reuse: when the served chain extends the
-# cached one, only the tail files are read (the per-batch warm path).
-_BAND_CACHE: OrderedDict = OrderedDict()
-_BAND_CACHE_CAP = 64
 
 
 def _sig_cols(num_hashes: int) -> list[str]:
     return [f"h{i}" for i in range(num_hashes)]
 
 
-def _write_band_table(storage, bucket: int, name: str, cols: dict) -> None:
-    sink = pa.BufferOutputStream()
-    pq.write_table(pa.table(cols), sink, compression="zstd")
-    storage.write_bytes(bucket, name, sink.getvalue().to_pybytes())
-
-
-def _read_band_table(storage, bucket: int, name: str) -> dict:
-    t = pq.read_table(pa.BufferReader(storage.read_bytes(bucket, name)))
-    return {c: t.column(c).to_numpy() for c in t.column_names}
-
-
-def _load_bands(
-    storage, bucket: int, chain: tuple[str, ...], num_hashes: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """One bucket's band rows folded from its delta chain: returns
-    (bkey sorted ascending, ids aligned, sigs aligned [n, H])."""
-    key = storage.key(bucket)
-    cached = _BAND_CACHE.get(key)
-    start = 0
-    prev = None
-    if cached is not None:
-        old_chain, arrs = cached
-        if old_chain == chain[: len(old_chain)]:
-            start = len(old_chain)
-            prev = arrs
-        # else: compaction replaced the chain -> rebuild from scratch
-    if prev is not None and start == len(chain):
-        _BAND_CACHE.move_to_end(key)
-        return prev
-    parts_k, parts_i, parts_s = [], [], []
-    if prev is not None:
-        parts_k.append(prev[0])
-        parts_i.append(prev[1])
-        parts_s.append(prev[2])
-    for name in chain[start:]:
-        cols = _read_band_table(storage, bucket, name)
-        parts_k.append(cols["bkey"])
-        parts_i.append(cols["id"])
-        parts_s.append(
-            np.column_stack([cols[c] for c in _sig_cols(num_hashes)])
-            if len(cols["bkey"])
-            else np.empty((0, num_hashes), dtype=np.int64)
-        )
-    bkey = np.concatenate(parts_k) if parts_k else np.empty(0, dtype=np.int64)
-    ids = np.concatenate(parts_i) if parts_i else np.empty(0, dtype=np.int64)
-    sigs = (
-        np.concatenate(parts_s)
-        if parts_s
-        else np.empty((0, num_hashes), dtype=np.int64)
-    )
-    order = np.argsort(bkey, kind="stable")
-    arrs = (bkey[order], ids[order], sigs[order])
-    _cache_put(_BAND_CACHE, _BAND_CACHE_CAP, key, (tuple(chain), arrs))
-    return arrs
+def _sort_by_bkey(cols: Columns) -> Columns:
+    """The chain fold: every band row, stably sorted by bkey (equal
+    bkeys keep chain order, so a capped probe span is deterministic)."""
+    order = np.argsort(cols["bkey"], kind="stable")
+    return {c: a[order] for c, a in cols.items()}
 
 
 class NearDupIndex:
@@ -182,73 +114,32 @@ class NearDupIndex:
     ) -> None:
         if num_hashes % rows_per_band != 0:
             raise ValueError("num_hashes must be divisible by rows_per_band")
-        self.root = root
-        self.storage = storage if storage is not None else _default_storage(root)
         self.num_buckets = num_buckets
         self.num_hashes = num_hashes
         self.rows_per_band = rows_per_band
         self.n_bands = num_hashes // rows_per_band
         self.k = k
-        os.makedirs(root, exist_ok=True)
-        self._manifest = self._load_manifest()
-        geo = {
-            "num_buckets": num_buckets,
-            "num_hashes": num_hashes,
-            "rows_per_band": rows_per_band,
-            "k": k,
-        }
-        if self._manifest and (
-            self._manifest.get("format") != _FORMAT
-            or {g: self._manifest.get(g) for g in geo} != geo
-        ):
-            # destructive: a geometry/format mismatch re-routes every
-            # band, so the persisted index is unusable — but dropping
-            # hours of admitted state silently on a typo'd parameter is
-            # a footgun (ADVICE r5): name the mismatch before reset
-            import logging
-
-            diffs = {
-                g: (self._manifest.get(g), geo[g])
-                for g in geo
-                if self._manifest.get(g) != geo[g]
-            }
-            if self._manifest.get("format") != _FORMAT:
-                diffs["format"] = (self._manifest.get("format"), _FORMAT)
-            logging.getLogger(__name__).warning(
-                "NearDupIndex at %s: geometry/format mismatch %s — "
-                "dropping the persisted index and starting empty "
-                "(manifest value, requested value)",
-                root, diffs,
-            )
-            self.reset()
-        self._pending: dict[str, dict] | None = None
-        self._pending_batch: int | None = None
-
-    # -- manifest ----------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "manifest.json")
-
-    def _load_manifest(self) -> dict | None:
-        p = self._manifest_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        # a geometry/format mismatch re-routes every band, so the store
+        # drops the persisted index (with a warning naming the mismatch)
+        self.store = BucketChainStore(
+            root, storage, _FORMAT,
+            {
+                "num_buckets": num_buckets,
+                "num_hashes": num_hashes,
+                "rows_per_band": rows_per_band,
+                "k": k,
+            },
+            seq_key="batch", prefix="bands", tag="b",
+        )
 
     @property
     def committed_batch(self) -> int | None:
-        return self._manifest["batch"] if self._manifest else None
-
-    def reset(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
-        os.makedirs(self.root, exist_ok=True)
-        self._manifest = None
-        self._pending = None
-        self._pending_batch = None
+        return self.store.committed
 
     # -- shared plan fragments ----------------------------------------------
     def _band_rows(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-        """(id, bkey, h0..h{H-1}, bucket) — signatures are row-local
+        """(bkey, id, h0..h{H-1}, bucket) — the on-disk band row plus
+        its bucket; signatures are row-local
         (zero-shuffle, functions/dedup.minhash_signatures); the band
         fan-out is one Generate over a literal band-struct array, the
         bkey is JVM xxhash64 so probe/admit workers never hash."""
@@ -274,7 +165,7 @@ class NearDupIndex:
             sig.localCheckpoint(eager=False)
             .select("id", *hs, F.explode(band_structs).alias("_b"))
             .select(
-                "id", F.col("_b.bkey").alias("bkey"), *hs,
+                F.col("_b.bkey").alias("bkey"), "id", *hs,
                 F.pmod(F.col("_b.bkey"), F.lit(self.num_buckets))
                 .cast("int")
                 .alias(_BUCKET_COL),
@@ -311,13 +202,13 @@ class NearDupIndex:
         spark = df.sparkSession
         H = self.num_hashes
         n_min = math.ceil(threshold * H)
-        buckets_meta = (self._manifest or {}).get("buckets", {})
-        if not buckets_meta:
+        chains = self.store.chains()
+        if not chains:
             return spark.createDataFrame(
                 [], f"{id_col} long, dup_of long, est_jaccard double"
             )
-        chains = {int(b): tuple(v["deltas"]) for b, v in buckets_meta.items()}
-        storage = self.storage
+        hs = _sig_cols(H)
+        storage = self.store.storage
         bands = self._band_rows(df, text_col, id_col)
 
         out_schema = StructType(
@@ -335,10 +226,12 @@ class NearDupIndex:
                 return pd.DataFrame({"id": [], "dup_of": [], "n_eq": []}).astype(
                     {"id": np.int64, "dup_of": np.int64, "n_eq": np.int32}
                 )
-            skey, sids, ssigs = _load_bands(storage, b, chain, H)
+            stored = load_chain(storage, b, chain, _sort_by_bkey)
+            skey, sids = stored["bkey"], stored["id"]
+            ssigs = np.column_stack([stored[c] for c in hs])
             ck = pdf["bkey"].to_numpy()
             cid = pdf["id"].to_numpy()
-            csig = np.column_stack([pdf[c].to_numpy() for c in _sig_cols(H)])
+            csig = np.column_stack([pdf[c].to_numpy() for c in hs])
             left = np.searchsorted(skey, ck, "left")
             right = np.searchsorted(skey, ck, "right")
             if max_span is not None:
@@ -444,165 +337,25 @@ class NearDupIndex:
         ``bands_b{N}.parquet`` delta; untouched buckets are not
         rewritten. Staged until ``commit()``. Returns band rows
         written."""
-        storage = self.storage
-        H = self.num_hashes
-        bands = self._band_rows(df, text_col, id_col)
-        out_schema = StructType(
-            [
-                StructField("bucket", IntegerType()),
-                StructField("n", LongType()),
-                StructField("delta_file", StringType()),
-            ]
-        )
-
-        def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(pdf[_BUCKET_COL].iloc[0])
-            name = f"bands_b{batch_no:05d}.parquet"
-            cols = {
-                "bkey": pdf["bkey"].to_numpy(),
-                "id": pdf["id"].to_numpy(),
-            }
-            for c in _sig_cols(H):
-                cols[c] = pdf[c].to_numpy()
-            _write_band_table(storage, b, name, cols)
-            return pd.DataFrame(
-                {"bucket": [b], "n": [len(pdf)], "delta_file": [name]}
-            )
-
-        rows = bands.groupBy(_BUCKET_COL).applyInPandas(_write, out_schema).collect()
-        buckets_meta = (self._manifest or {}).get("buckets", {})
-        pending = {b: dict(v) for b, v in buckets_meta.items()}
-        n_total = 0
-        for r in rows:
-            b = str(r["bucket"])
-            ent = pending.get(b, {"deltas": []})
-            chain = list(ent.get("deltas", []))
-            # replayed batch (streaming foreachBatch retry): the delta
-            # file was atomically rewritten with the same row set —
-            # keep the chain entry unique so the fold stays idempotent
-            if r["delta_file"] not in chain:
-                chain.append(r["delta_file"])
-            ent["deltas"] = chain
-            pending[b] = ent
-            n_total += r["n"]
-        self._pending = pending
-        self._pending_batch = batch_no
-        return n_total
+        return self.store.stage(self._band_rows(df, text_col, id_col), _BUCKET_COL, batch_no)
 
     def commit(self) -> None:
         """Atomically publish the staged batch (tiny driver-side JSON).
         Call AFTER the caller's corpus commit — probes serve the last
         committed manifest only."""
-        if self._pending is None:
-            return
-        manifest = {
-            "batch": self._pending_batch,
-            "format": _FORMAT,
-            "num_buckets": self.num_buckets,
-            "num_hashes": self.num_hashes,
-            "rows_per_band": self.rows_per_band,
-            "k": self.k,
-            "buckets": self._pending,
-        }
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
-        self._manifest = manifest
-        self._pending = None
-        self._pending_batch = None
+        self.store.commit()
 
     def rebuild(self, df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> None:
         """Recovery / geometry change: drop and re-index the admitted
         corpus in one pass (the index is a cache, never the record)."""
-        self.reset()
+        self.store.reset()
         self.admit(df, 0, text_col=text_col, id_col=id_col)
         self.commit()
 
     # -- maintenance ------------------------------------------------------------
-    @staticmethod
-    def _compact_bucket(
-        storage, bucket: int, chain: list[str], base_name: str, num_hashes: int
-    ) -> None:
-        """Fold ONE bucket's delta chain into a bkey-sorted base file —
-        runs on the driver (local path) or inside an executor task
-        (distributed path), all I/O through the storage seam.
-
-        Crash safety (ADVICE r5, medium): write-only — superseded chain
-        files are garbage-collected by ``compact()`` only AFTER the new
-        manifest is published, so a crash or Spark task retry anywhere
-        in here leaves the committed manifest's chain fully readable
-        and the task idempotent (a retry re-reads the still-present
-        chain and rewrites the same base)."""
-        bkey, ids, sigs = _load_bands(storage, bucket, tuple(chain), num_hashes)
-        cols = {"bkey": bkey, "id": ids}
-        for j, c in enumerate(_sig_cols(num_hashes)):
-            cols[c] = sigs[:, j].copy()
-        _write_band_table(storage, bucket, base_name, cols)
-
-    def compact(self, spark=None) -> None:
+    def compact(self, spark) -> None:
         """Fold each bucket's delta chain into one bkey-sorted base
-        file (per-bucket and incremental, through the storage seam —
-        never a global rewrite). With a SparkSession the fold runs as
-        ONE DISTRIBUTED job, one task per bucket (same shape as
-        ``admit`` — nothing bucket-sized touches the driver); without
-        one it loops buckets driver-side (fine on local/shared fs).
-        Probe caches key on the chain, so a compacted chain misses
-        once and reloads one file."""
-        if not self._manifest:
-            return
-        H = self.num_hashes
-        batch = self._manifest["batch"]
-        buckets = self._manifest["buckets"]
-        base = f"bands_base_b{batch:05d}.parquet"
-        work = [
-            (int(b), list(ent.get("deltas", [])))
-            for b, ent in buckets.items()
-            if len(ent.get("deltas", [])) > 1
-        ]
-        if spark is not None and work:
-            storage = self.storage
-            compact_one = NearDupIndex._compact_bucket
-
-            def _task(pdf: pd.DataFrame) -> pd.DataFrame:
-                for row in pdf.itertuples(index=False):
-                    compact_one(
-                        storage, int(row.bucket), json.loads(row.chain), base, H
-                    )
-                return pdf[["bucket"]]
-
-            spark.createDataFrame(
-                [(b, json.dumps(ch)) for b, ch in work],
-                "bucket int, chain string",
-            ).repartition(len(work), F.col("bucket")).groupBy("bucket").applyInPandas(
-                _task,
-                StructType([StructField("bucket", IntegerType())]),
-            ).count()
-        else:
-            for b, ch in work:
-                NearDupIndex._compact_bucket(self.storage, b, ch, base, H)
-        # two-phase publish (ADVICE r5, medium): bases are written
-        # above; commit the manifest pointing at [base] FIRST, and only
-        # then GC the now-unreferenced chain files. A crash before the
-        # publish leaves the old manifest + intact chains; a crash
-        # during GC leaves unreferenced band files that the sweep below
-        # removes on the next compaction (every bands file at or below
-        # the compacted batch that the new manifest does not reference).
-        for b, _ch in work:
-            buckets[str(b)]["deltas"] = [base]
-        manifest = dict(self._manifest)
-        manifest["buckets"] = buckets
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
-        self._manifest = manifest
-        bands_re = re.compile(r"^bands(?:_base)?_b(\d+)\.parquet$")
-        for b, _ch in work:
-            live = set(buckets[str(b)].get("deltas", []))
-            for name in self.storage.list_bucket(b):
-                m_f = bands_re.match(name)
-                # never touch files from batches NEWER than the
-                # compacted manifest batch (staged-but-uncommitted)
-                if m_f and int(m_f.group(1)) <= batch and name not in live:
-                    self.storage.remove(b, name)
+        file, as one distributed job over the buckets whose chain has
+        more than one file (per-bucket and incremental — never a global
+        rewrite)."""
+        self.store.compact(spark, _sort_by_bkey)

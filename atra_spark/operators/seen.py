@@ -177,9 +177,7 @@ def compose_host_state(base: DataFrame | None, deltas: list[tuple[int, DataFrame
     )
 
 
-def aggregate_candidates(
-    exploded_links: DataFrame, num_salts: int = 0, salt_threshold: int = 0
-) -> DataFrame:
+def aggregate_candidates(exploded_links: DataFrame) -> DataFrame:
     """Collapse one round's extracted links to unique candidate URLs
     with the lowest depth triple (depth merge_to_lowest,
     atra/src/url/depth.rs:59-65, applied when the same URL is
@@ -192,11 +190,8 @@ def aggregate_candidates(
     most ONE pre-combined row per map partition to its reducer; no
     reducer ever sees the raw hot-key fan-in. An explicit salt layer on
     top adds a whole extra shuffle for zero additional skew protection
-    (measured: the salted variant costs one more exchange + stage
-    barrier per round). ``num_salts>0`` keeps the explicit salted
-    two-phase available for HOLISTIC aggregates (collect_list-style
-    merges, where map-side combine cannot reduce) and for the plan
-    test that pins its shape.
+    (measured: the salted variant cost one more exchange + stage
+    barrier per round).
 
     The relation is deliberately NARROW — ``url`` plus the three
     depth longs, nothing else (bandwidth diet for the frontier
@@ -216,14 +211,4 @@ def aggregate_candidates(
     Expects columns: url, ``DEPTH_COLS``; any other column (e.g.
     host) is dropped by the grouping.
     """
-    aggs = [F.min(c).alias(c) for c in DEPTH_COLS]
-    if num_salts <= 1:
-        return exploded_links.groupBy("url").agg(*aggs)
-    partial = (
-        exploded_links.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("url")) + F.spark_partition_id(), F.lit(num_salts))
-        )
-        .groupBy("url", "_salt")
-        .agg(*aggs)
-    )
-    return partial.groupBy("url").agg(*aggs)
+    return exploded_links.groupBy("url").agg(*[F.min(c).alias(c) for c in DEPTH_COLS])

@@ -4,8 +4,9 @@ The reference answers "have I seen this URL?" and "what state is it
 in?" with RocksDB point lookups (``key_may_exist_cf``,
 atra/src/recrawl_management/mod.rs:62; exact get + merge-operator fold
 in link_state/db.rs, the dequeue state check at
-queue/.../polling.rs:180-204). This module is that storage engine
-mapped onto Spark's execution model:
+queue/.../polling.rs:180-204). This module is that lookup mapped onto
+Spark's execution model, stored in the shared bucket-chain engine
+(operators/bucket_chain.py: delta chains, manifest commit, compaction):
 
 - the URL universe is split into ``num_buckets`` buckets by
   ``pmod(hash(url), B)`` — Spark's OWN hash-partitioning assignment
@@ -15,23 +16,23 @@ mapped onto Spark's execution model:
   additional exchange (``aligned=True``): every bucket's rows already
   sit in exactly one task, and AQE partition coalescing only merges
   whole buckets, never splits one;
-- each bucket owns a chain of per-round delta parquet files (RocksDB
+- each bucket owns a chain of per-round delta files (RocksDB
   memtable-flush/SST economics: appends only, periodic compaction,
   never a full-index rewrite). Deltas store TWO independent 64-bit
   hashes per URL — ``xxhash64(url)`` and ``xxhash64(url, 1)`` — plus
   the URL's link-state ``kind`` byte: 17 bytes/URL instead of the URL
   string. Lookup is a lexsorted-numpy pair search; within a chain the
-  NEWEST occurrence of a pair wins, which makes the chain the
-  merge-operator fold of the reference's state transitions
-  (raw.rs:249-306: the newer operand's kind wins). The 128-bit
-  composite makes a false "seen" verdict a 2^-128-scale event
-  (expected colliding pairs at 10^10 URLs: n^2/2^129 ~= 1.5e-19) —
-  exact for any real corpus;
+  NEWEST occurrence of a pair wins (``_dedup_last``, the chain fold),
+  which makes the chain the merge-operator fold of the reference's
+  state transitions (raw.rs:249-306: the newer operand's kind wins).
+  The 128-bit composite makes a false "seen" verdict a 2^-128-scale
+  event (expected colliding pairs at 10^10 URLs: n^2/2^129 ~= 1.5e-19)
+  — exact for any real corpus;
 - membership probing (``prune_new``) and state lookup
   (``filter_by_state``) run ``mapInPandas`` over one shared kernel:
-  each task loads ONLY its buckets' hash-pair chains from shared
-  storage, with a per-worker LRU cache across tasks, and searches
-  them with ``np.searchsorted``.
+  each task loads ONLY its buckets' folded chains from shared storage,
+  with the per-worker chain-prefix LRU, and searches them with
+  ``np.searchsorted``.
 
 The reference puts an approximate-membership check in front of its
 exact lookup because that lookup is a disk read. Here the exact
@@ -63,108 +64,35 @@ the seen snapshot when the manifest round disagrees.
 
 from __future__ import annotations
 
-import json
-import os
-import re
-import shutil
-import tempfile
-import uuid
-from collections import OrderedDict
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..schemas import KIND_DISCOVERED
+from .bucket_chain import BucketChainStore, Columns, load_chain
 
 _FORMAT = 4  # on-disk layout version: a directory of any other version is reset
 _BUCKET_COL = "_si_bucket"
 _H1_COL = "_si_h1"
 _H2_COL = "_si_h2"
-_KIND_COL = "_si_kind"
-
-# ---------------------------------------------------------------------------
-# per-worker caches (live in the reused Python worker processes; an
-# executor only ever caches the buckets it actually probed)
-# ---------------------------------------------------------------------------
-_HASHSET_CACHE: OrderedDict[str, tuple[tuple, np.ndarray, np.ndarray, np.ndarray]] = OrderedDict()
-_HASHSET_CACHE_CAP = 64
 
 
-def _cache_put(cache: OrderedDict, cap: int, key, value) -> None:
-    cache[key] = value
-    cache.move_to_end(key)
-    while len(cache) > cap:
-        cache.popitem(last=False)
-
-
-def _dedup_last(
-    h1: np.ndarray, h2: np.ndarray, kinds: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Lexsort by (h1, h2) and keep the LAST occurrence of each pair.
-    np.lexsort is stable, so equal pairs retain input order — with the
-    input concatenated in chain order, "last" is the newest state: the
-    RocksDB merge-operator fold (newer operand's kind wins,
-    raw.rs:249-306) as one vectorized pass."""
+def _dedup_last(cols: Columns) -> Columns:
+    """The chain fold: lexsort by (h1, h2) and keep the LAST occurrence
+    of each pair. np.lexsort is stable, so equal pairs retain input
+    order — with the input concatenated in chain order, "last" is the
+    newest state: the RocksDB merge-operator fold (newer operand's kind
+    wins, raw.rs:249-306) as one vectorized pass."""
+    h1, h2, kinds = cols["h1"], cols["h2"], cols["kind"]
     order = np.lexsort((h2, h1))
     h1s, h2s, ks = h1[order], h2[order], kinds[order]
     if len(h1s):
         keep = np.ones(len(h1s), dtype=bool)
         keep[:-1] = (h1s[1:] != h1s[:-1]) | (h2s[1:] != h2s[:-1])
         h1s, h2s, ks = h1s[keep], h2s[keep], ks[keep]
-    return h1s, h2s, ks
-
-
-def _load_hashset(
-    storage, bucket: int, deltas: tuple[str, ...]
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exact (hash-pair -> latest kind) set for one bucket = fold of its
-    delta parquets in chain order, lexsorted by (h1, h2) with one row
-    per pair. Cached per worker keyed by bucket; when the cached delta
-    chain is a PREFIX of the requested one only the new tail files are
-    read (the per-round warm path reads exactly one small file; the
-    re-dedup is an in-memory numpy sort of the bucket)."""
-    key = storage.key(bucket)
-    cached = _HASHSET_CACHE.get(key)
-    start = 0
-    if cached is not None:
-        old_chain, s1, s2, sk = cached
-        if old_chain == deltas[: len(old_chain)]:
-            start = len(old_chain)
-        else:  # compaction replaced the chain -> rebuild from scratch
-            s1 = s2 = sk = None
-            start = 0
-    else:
-        s1 = s2 = sk = None
-    if start < len(deltas) or s1 is None:
-        # cached (already-deduped) rows first, then tail files in chain
-        # order: the stable keep-last dedup makes newer kinds win
-        parts1 = [] if s1 is None else [s1]
-        parts2 = [] if s2 is None else [s2]
-        partsk = [] if sk is None else [sk]
-        for name in deltas[start:]:
-            h1a, h2a, ka = storage.read_pairs(bucket, name)
-            parts1.append(h1a)
-            parts2.append(h2a)
-            partsk.append(ka)
-        h1 = np.concatenate(parts1) if parts1 else np.empty(0, dtype=np.int64)
-        h2 = np.concatenate(parts2) if parts2 else np.empty(0, dtype=np.int64)
-        ks = np.concatenate(partsk) if partsk else np.empty(0, dtype=np.int32)
-        s1, s2, sk = _dedup_last(h1, h2, ks)
-        _cache_put(
-            _HASHSET_CACHE, _HASHSET_CACHE_CAP, key, (tuple(deltas), s1, s2, sk)
-        )
-    else:
-        _HASHSET_CACHE.move_to_end(key)
-    return s1, s2, sk
+    return {"h1": h1s, "h2": h2s, "kind": ks}
 
 
 def _pair_lookup(
@@ -194,222 +122,22 @@ def _pair_lookup(
     return out
 
 
-def _lookup_kinds(pdf: pd.DataFrame, buckets_meta: dict, storage) -> np.ndarray:
+def _lookup_kinds(pdf: pd.DataFrame, chains: dict, storage) -> np.ndarray:
     """Latest indexed kind for every row of one tagged batch (-1 when
-    the URL is not indexed): per bucket, load its (cached) chain and
-    run ``_pair_lookup``. The one kernel behind both probes."""
+    the URL is not indexed): per bucket, load its (cached) folded chain
+    and run ``_pair_lookup``. The one kernel behind both probes."""
     kinds = np.full(len(pdf), -1, dtype=np.int32)
     b_arr = pdf[_BUCKET_COL].to_numpy()
     h1_arr = pdf[_H1_COL].to_numpy()
     h2_arr = pdf[_H2_COL].to_numpy()
     for b in np.unique(b_arr):
-        deltas = buckets_meta.get(int(b))
-        if not deltas:  # bucket never indexed -> nothing in it is seen
+        chain = chains.get(int(b))
+        if not chain:  # bucket never indexed -> nothing in it is seen
             continue
         sel = b_arr == b
-        s1, s2, sk = _load_hashset(storage, int(b), deltas)
-        kinds[sel] = _pair_lookup(h1_arr[sel], h2_arr[sel], s1, s2, sk)
+        s = load_chain(storage, int(b), chain, _dedup_last)
+        kinds[sel] = _pair_lookup(h1_arr[sel], h2_arr[sel], s["h1"], s["h2"], s["kind"])
     return kinds
-
-
-def _atomic_write(path: str, data: bytes) -> None:
-    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "wb") as f:
-        f.write(data)
-    os.replace(tmp, path)
-
-
-class LocalBucketStorage:
-    """Bucket-object I/O seam for the SeenIndex (VERDICT r3 #5).
-
-    Every byte the index reads or writes — the hash-pair delta
-    parquets, one directory per bucket — goes through this
-    object, on the driver AND inside executor tasks (it is a plain
-    picklable value: just the root path). The local-filesystem
-    implementation below is what local[n] and shared-fs clusters use;
-    an object-store implementation (S3/GCS/ABFS paths, conditional-put
-    for the atomic publishes) implements the same five methods and
-    slots in via ``SeenIndex(..., storage=...)`` without touching any
-    index logic. Cache keys are storage-scoped so two indexes never
-    alias each other's worker-side LRU entries."""
-
-    def __init__(self, root: str) -> None:
-        self.root = root
-
-    def _path(self, bucket: int, name: str) -> str:
-        return os.path.join(self.root, f"bucket={bucket:05d}", name)
-
-    def key(self, bucket: int, name: str = "") -> str:
-        """Stable cache key for a bucket object (or the bucket itself)."""
-        return self._path(bucket, name)
-
-    def read_bytes(self, bucket: int, name: str) -> bytes:
-        with open(self._path(bucket, name), "rb") as f:
-            return f.read()
-
-    def write_bytes(self, bucket: int, name: str, data: bytes) -> None:
-        path = self._path(bucket, name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        _atomic_write(path, data)
-
-    def read_pairs(
-        self, bucket: int, name: str
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(self._path(bucket, name), columns=["h1", "h2", "kind"])
-        return (
-            t.column("h1").to_numpy(),
-            t.column("h2").to_numpy(),
-            t.column("kind").to_numpy(),
-        )
-
-    def write_pairs(
-        self, bucket: int, name: str, h1: np.ndarray, h2: np.ndarray, kind: np.ndarray
-    ) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        path = self._path(bucket, name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        pq.write_table(
-            pa.table(
-                {
-                    "h1": pa.array(h1, type=pa.int64()),
-                    "h2": pa.array(h2, type=pa.int64()),
-                    "kind": pa.array(kind.astype(np.int32), type=pa.int32()),
-                }
-            ),
-            tmp,
-            compression="zstd",
-        )
-        os.replace(tmp, path)
-
-    def list_bucket(self, bucket: int) -> list[str]:
-        d = os.path.dirname(self._path(bucket, "x"))
-        try:
-            return sorted(os.listdir(d))
-        except FileNotFoundError:
-            return []
-
-    def remove(self, bucket: int, name: str) -> None:
-        try:
-            os.remove(self._path(bucket, name))
-        except FileNotFoundError:
-            pass
-
-
-class FlatObjectBucketStorage:
-    """Object-store-shaped BucketStorage: the SECOND implementation of
-    the seam, proving the interface complete for S3/GCS/ABFS backends
-    (VERDICT r4 #9). The namespace is FLAT — string keys
-    ``"<bucket>/<name>"`` mapped to whole objects; no directories, no
-    rename, no listdir ever reaches the API surface:
-
-    - GET/PUT move whole objects (pair tables travel as parquet BYTES
-      through in-memory Arrow buffers, never a local file path),
-    - LIST is a key-prefix scan (S3 ListObjectsV2 semantics),
-    - publishes are single-object puts (the conditional-put analog —
-      the temp-file shuffle below is an emulation detail of the local
-      backing dir, not part of the contract).
-
-    Picklable (root string only), so executors construct their side of
-    it exactly like LocalBucketStorage. A real S3 implementation swaps
-    the six method bodies for boto3 calls and changes nothing else."""
-
-    def __init__(self, root: str) -> None:
-        self.root = root
-
-    def _obj_key(self, bucket: int, name: str) -> str:
-        return f"{bucket:05d}/{name}"
-
-    def _fname(self, key: str) -> str:
-        from urllib.parse import quote
-
-        return os.path.join(self.root, quote(key, safe=""))
-
-    def key(self, bucket: int, name: str = "") -> str:
-        # storage-scoped cache key (distinct scheme so a Local index on
-        # the same root can never alias this one's worker LRU entries)
-        return f"flatobj://{self.root}/{self._obj_key(bucket, name)}"
-
-    def _put(self, key: str, data: bytes) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        _atomic_write(self._fname(key), data)
-
-    def _get(self, key: str) -> bytes:
-        with open(self._fname(key), "rb") as f:
-            return f.read()
-
-    def read_bytes(self, bucket: int, name: str) -> bytes:
-        return self._get(self._obj_key(bucket, name))
-
-    def write_bytes(self, bucket: int, name: str, data: bytes) -> None:
-        self._put(self._obj_key(bucket, name), data)
-
-    def read_pairs(
-        self, bucket: int, name: str
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(
-            pa.BufferReader(self.read_bytes(bucket, name)),
-            columns=["h1", "h2", "kind"],
-        )
-        return (
-            t.column("h1").to_numpy(),
-            t.column("h2").to_numpy(),
-            t.column("kind").to_numpy(),
-        )
-
-    def write_pairs(
-        self, bucket: int, name: str, h1: np.ndarray, h2: np.ndarray, kind: np.ndarray
-    ) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        sink = pa.BufferOutputStream()
-        pq.write_table(
-            pa.table(
-                {
-                    "h1": pa.array(h1, type=pa.int64()),
-                    "h2": pa.array(h2, type=pa.int64()),
-                    "kind": pa.array(kind.astype(np.int32), type=pa.int32()),
-                }
-            ),
-            sink,
-            compression="zstd",
-        )
-        self.write_bytes(bucket, name, sink.getvalue().to_pybytes())
-
-    def list_bucket(self, bucket: int) -> list[str]:
-        from urllib.parse import quote, unquote
-
-        prefix = quote(self._obj_key(bucket, ""), safe="")
-        try:
-            entries = os.listdir(self.root)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            unquote(e)[len(self._obj_key(bucket, "")):]
-            for e in entries
-            if e.startswith(prefix)
-        )
-
-    def remove(self, bucket: int, name: str) -> None:
-        try:
-            os.remove(self._fname(self._obj_key(bucket, name)))
-        except FileNotFoundError:
-            pass
-
-
-def _default_storage(root: str):
-    """Storage used when SeenIndex gets none explicitly — a seam the
-    test matrix repoints at FlatObjectBucketStorage to run every index
-    test under both implementations."""
-    return LocalBucketStorage(root)
 
 
 def _hash_cols(col):
@@ -418,10 +146,7 @@ def _hash_cols(col):
     Spark's own hash-partitioning function, murmur3 via F.hash, the
     same Pmod(Murmur3Hash(url), B) assignment groupBy(url) produces —
     pinned by tests)."""
-    return (
-        F.xxhash64(col).alias(_H1_COL),
-        F.xxhash64(col, F.lit(1)).alias(_H2_COL),
-    )
+    return F.xxhash64(col), F.xxhash64(col, F.lit(1))
 
 
 class SeenIndex:
@@ -436,62 +161,26 @@ class SeenIndex:
     indexed but not committed.
     """
 
-    def __init__(
-        self,
-        root: str,
-        num_buckets: int = 32,
-        storage: "LocalBucketStorage | FlatObjectBucketStorage | None" = None,
-    ) -> None:
-        self.root = root
-        self.storage = storage if storage is not None else _default_storage(root)
+    def __init__(self, root: str, num_buckets: int = 32, storage=None) -> None:
         self.num_buckets = num_buckets
-        os.makedirs(root, exist_ok=True)
-        self._manifest = self._load_manifest()
-        if self._manifest and (
-            self._manifest.get("format") != _FORMAT
-            # a different bucket count re-routes every URL: probing old
-            # bucket files under the new routing would miss seen URLs
-            # (silent re-crawls); bench/tools legitimately derive B from
-            # the session's shuffle-partition count, which varies
-            or self._manifest.get("num_buckets") != num_buckets
-        ):
-            # the index is a rebuildable CACHE over the committed seen
-            # table, so an older on-disk format or another geometry is
-            # dropped — committed_round becomes None, which the engine's
-            # resume path already treats as "rebuild from the seen
-            # snapshot" (plans/crawl.py)
-            self.reset()
-        self._pending: dict[str, dict] | None = None
-        self._pending_round: int | None = None
-
-    # -- manifest ----------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "manifest.json")
-
-    def _load_manifest(self) -> dict | None:
-        p = self._manifest_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def _publish_manifest(self, manifest: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
-        self._manifest = manifest
+        # a different bucket count re-routes every URL: probing old
+        # bucket files under the new routing would miss seen URLs
+        # (silent re-crawls), so the store drops such a directory and
+        # committed_round becomes None, which the engine's resume path
+        # treats as "rebuild from the seen snapshot" (plans/crawl.py);
+        # bench/tools legitimately derive B from the session's
+        # shuffle-partition count, which varies
+        self.store = BucketChainStore(
+            root, storage, _FORMAT, {"num_buckets": num_buckets},
+            seq_key="round", prefix="hashes", tag="r",
+        )
 
     @property
     def committed_round(self) -> int | None:
-        return self._manifest["round"] if self._manifest else None
+        return self.store.committed
 
     def reset(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
-        os.makedirs(self.root, exist_ok=True)
-        self._manifest = None
-        self._pending = None
-        self._pending_round = None
+        self.store.reset()
 
     # -- build / maintain --------------------------------------------------
     def add_urls(self, df: DataFrame, round_no: int) -> int:
@@ -499,70 +188,26 @@ class SeenIndex:
         a missing kind column means Discovered — pure membership use).
         Distributed: one task per touched bucket writes a
         ``hashes_r{N}.parquet`` delta (two int64 hash columns + kind,
-        never URL strings) and returns one tiny summary row. A URL
-        already indexed may appear again with a new kind: the chain fold
-        makes the newest kind win (the merge-operator semantics).
-        Buckets with no rows are untouched. Returns the number of URLs
-        staged."""
-        storage = self.storage
-        buckets_meta = (self._manifest or {}).get("buckets", {})
-
+        never URL strings). A URL already indexed may appear again with
+        a new kind: the chain fold makes the newest kind win (the
+        merge-operator semantics). Buckets with no rows are untouched.
+        Returns the number of URLs staged."""
         kind_col = (
             F.col("kind").cast("int") if "kind" in df.columns else F.lit(KIND_DISCOVERED)
         )
+        h1, h2 = _hash_cols(F.col("url"))
         hashed = df.select(
-            *_hash_cols(F.col("url")),
-            kind_col.alias(_KIND_COL),
+            h1.alias("h1"),
+            h2.alias("h2"),
+            kind_col.alias("kind"),
             F.pmod(F.hash("url"), F.lit(self.num_buckets)).cast("int").alias(_BUCKET_COL),
         )
-
-        out_schema = StructType(
-            [
-                StructField("bucket", IntegerType()),
-                StructField("n", LongType()),
-                StructField("delta_file", StringType()),
-            ]
-        )
-
-        def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(pdf[_BUCKET_COL].iloc[0])
-            delta_name = f"hashes_r{round_no:05d}.parquet"
-            storage.write_pairs(
-                b,
-                delta_name,
-                pdf[_H1_COL].to_numpy(),
-                pdf[_H2_COL].to_numpy(),
-                pdf[_KIND_COL].to_numpy(),
-            )
-            return pd.DataFrame({"bucket": [b], "n": [len(pdf)], "delta_file": [delta_name]})
-
-        rows = hashed.groupBy(_BUCKET_COL).applyInPandas(_build, out_schema).collect()
-        pending = {b: dict(v) for b, v in buckets_meta.items()}
-        n_total = 0
-        for r in rows:
-            b = str(r["bucket"])
-            deltas = pending.get(b, {}).get("deltas", [])
-            pending[b] = {"deltas": list(deltas) + [r["delta_file"]]}
-            n_total += r["n"]
-        self._pending = pending
-        self._pending_round = round_no
-        return n_total
+        return self.store.stage(hashed, _BUCKET_COL, round_no)
 
     def commit(self) -> None:
         """Atomically publish the staged round (driver-side, tiny JSON).
         Call AFTER the round's store tables committed."""
-        if self._pending is None:
-            return
-        self._publish_manifest(
-            {
-                "round": self._pending_round,
-                "format": _FORMAT,
-                "num_buckets": self.num_buckets,
-                "buckets": self._pending,
-            }
-        )
-        self._pending = None
-        self._pending_round = None
+        self.store.commit()
 
     def rebuild(self, seen_urls: DataFrame, round_no: int) -> None:
         """Recovery: drop and re-index from the committed seen table
@@ -572,95 +217,19 @@ class SeenIndex:
         self.add_urls(seen_urls, round_no)
         self.commit()
 
-    @staticmethod
-    def _compact_bucket(storage, bucket: int, deltas: list[str], base_name: str) -> None:
-        """Fold ONE bucket's delta chain into a deduped base file — runs
-        on the driver (local path) or inside an executor task
-        (distributed path), all I/O through the storage seam.
-
-        Crash safety (ADVICE r5, medium): this phase only WRITES the
-        new base — superseded delta files are garbage-collected by
-        ``compact()`` AFTER the updated manifest is published, so a
-        crash or retried task anywhere in here leaves the committed
-        manifest's whole chain readable (and the task idempotent: a
-        retry re-reads the still-present chain and rewrites the same
-        base)."""
-        parts1, parts2, partsk = [], [], []
-        for d in deltas:
-            h1a, h2a, ka = storage.read_pairs(bucket, d)
-            parts1.append(h1a)
-            parts2.append(h2a)
-            partsk.append(ka)
-        s1, s2, sk = _dedup_last(
-            np.concatenate(parts1), np.concatenate(parts2), np.concatenate(partsk)
-        )
-        storage.write_pairs(bucket, base_name, s1, s2, sk)
-
-    def compact(self, spark=None) -> None:
+    def compact(self, spark) -> None:
         """Fold each bucket's delta chain into one deduped file (latest
-        kind per pair — the chain fold burned in). With a SparkSession
-        the fold runs as ONE DISTRIBUTED job, one task per bucket with
-        more than one delta (the same per-bucket task shape as
-        ``add_urls`` — the cluster path: nothing bucket-sized touches
-        the driver); without one it loops buckets driver-side (fine on
-        local/shared fs). Probe caches key on the chain, so a
-        compacted chain simply misses once and reloads one file."""
-        if not self._manifest:
-            return
-        storage = self.storage
-        rnd = self._manifest["round"]
-        base_name = f"hashes_base_r{rnd:05d}.parquet"
-        buckets = self._manifest["buckets"]
-        fold = {int(b): ent["deltas"] for b, ent in buckets.items() if len(ent["deltas"]) > 1}
-        if spark is not None and fold:
-            compact_one = SeenIndex._compact_bucket
-
-            def _task(pdf: pd.DataFrame) -> pd.DataFrame:
-                for row in pdf.itertuples(index=False):
-                    compact_one(storage, int(row.bucket), json.loads(row.deltas), base_name)
-                return pdf[["bucket"]]
-
-            spark.createDataFrame(
-                [(b, json.dumps(ds)) for b, ds in fold.items()],
-                "bucket int, deltas string",
-            ).repartition(len(fold), F.col("bucket")).groupBy("bucket").applyInPandas(
-                _task, StructType([StructField("bucket", IntegerType())])
-            ).count()
-        else:
-            for b, ds in fold.items():
-                SeenIndex._compact_bucket(storage, b, ds, base_name)
-        # two-phase publish (ADVICE r5, medium): 1) bases written above,
-        # 2) commit the manifest pointing at [base] — only NOW are the
-        # old chains unreferenced — 3) GC superseded delta files. A
-        # crash before (2) leaves the old manifest + its intact chains;
-        # a crash during (3) leaves unreferenced files that the sweep
-        # below removes on the next compaction (it deletes every
-        # hashes file at or below the compacted round that the new
-        # manifest does not reference, so orphans cannot accumulate).
-        for b in fold:
-            buckets[str(b)]["deltas"] = [base_name]
-        self._publish_manifest(self._manifest)
-        hashes_re = re.compile(r"^hashes(?:_base)?_r(\d+)\.parquet$")
-        for b, ent in buckets.items():
-            live = set(ent["deltas"])
-            for name in storage.list_bucket(int(b)):
-                m_f = hashes_re.match(name)
-                # never touch files from rounds NEWER than the compacted
-                # manifest round (e.g. staged-but-uncommitted adds)
-                if m_f and int(m_f.group(1)) <= rnd and name not in live:
-                    storage.remove(int(b), name)
+        kind per pair — the chain fold burned in), as one distributed
+        job over the buckets whose chain has more than one file."""
+        self.store.compact(spark, _dedup_last)
 
     # -- probe ---------------------------------------------------------------
-    def _buckets_meta(self) -> dict[int, tuple[str, ...]]:
-        return {
-            int(b): tuple(v["deltas"])
-            for b, v in ((self._manifest or {}).get("buckets", {})).items()
-        }
-
     def _tagged(self, df: DataFrame, key: str, aligned: bool) -> DataFrame:
+        h1, h2 = _hash_cols(F.col(key))
         tagged = df.select(
             "*",
-            *_hash_cols(F.col(key)),
+            h1.alias(_H1_COL),
+            h2.alias(_H2_COL),
             F.pmod(F.hash(key), F.lit(self.num_buckets)).cast("int").alias(_BUCKET_COL),
         )
         if not aligned:
@@ -686,8 +255,8 @@ class SeenIndex:
         probe adds ZERO exchange. Misaligned input would still be
         CORRECT (each task loads whatever buckets it sees), only
         slower, but the engine pins alignment with a plan test."""
-        buckets_meta = self._buckets_meta()
-        storage = self.storage
+        chains = self.store.chains()
+        storage = self.store.storage
         out_schema = candidates.schema
         out_cols = candidates.columns
         tagged = self._tagged(candidates, key, aligned)
@@ -696,7 +265,7 @@ class SeenIndex:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                keep = _lookup_kinds(pdf, buckets_meta, storage) < 0
+                keep = _lookup_kinds(pdf, chains, storage) < 0
                 if keep.any():
                     yield pdf.loc[keep, out_cols]
 
@@ -726,8 +295,8 @@ class SeenIndex:
         its rows hash to, LRU-cached across tasks — per-round read cost
         tracks the probe side (the frontier), never |seen|.
         """
-        buckets_meta = self._buckets_meta()
-        storage = self.storage
+        chains = self.store.chains()
+        storage = self.store.storage
         out_cols = df.columns
         fields = list(df.schema.fields)
         if with_kind:
@@ -740,7 +309,7 @@ class SeenIndex:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                kinds = _lookup_kinds(pdf, buckets_meta, storage)
+                kinds = _lookup_kinds(pdf, chains, storage)
                 if keep_arr is None:
                     keep = np.ones(len(pdf), dtype=bool)
                 else:

@@ -25,7 +25,7 @@ as a Spark source:
 Cluster posture: paths here are plain `open()` because the sandbox is
 a shared local fs; on a real cluster the file list comes from the
 object store's listing and `_read_file` swaps to the storage seam
-(operators/seen_index.LocalBucketStorage is the pattern) — the plan
+(operators/bucket_chain.LocalBucketStorage is the pattern) — the plan
 shapes (per-file tasks, one reassembly shuffle, range-partitioned
 index write) are unchanged.
 """

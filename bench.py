@@ -12,7 +12,7 @@ corpus. Prints ONE JSON line:
                   the north-rule metric (BASELINE.json)
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
      ATRA_BENCH_PAGES (default 50000).
 """
 
@@ -468,7 +468,7 @@ def main() -> None:
 
 def _main_bench() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
     n_pages = int(os.environ.get("ATRA_BENCH_PAGES", "50000"))
 
     import __spark_entry__ as entry_mod

@@ -5,17 +5,16 @@ stay correct across multi-batch delta chains, staged-vs-committed
 admission, repartitioned input, and compaction, and the warm probe
 path must read only the newest delta (the O(batch) economics)."""
 
+import json
 import math
+import os
+import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from atra_spark.functions.dedup import minhash_signatures
+from atra_spark.operators.bucket_chain import LocalBucketStorage
 from atra_spark.operators.neardup_index import NearDupIndex
-from atra_spark.operators.seen_index import (
-    FlatObjectBucketStorage,
-    LocalBucketStorage,
-)
 
 
 def _docs(spark, rows):
@@ -80,12 +79,10 @@ def _probe_set(out):
 
 
 class TestNearDupIndex:
-    @pytest.mark.parametrize("storage_cls", [LocalBucketStorage, FlatObjectBucketStorage])
-    def test_probe_equals_exhaustive(self, spark, tmp_path, storage_cls):
+    def test_probe_equals_exhaustive(self, spark, tmp_path):
         hist = _docs(spark, _corpus(0, 60))
         batch = _docs(spark, _corpus(100, 140))
-        root = str(tmp_path / "ndx")
-        idx = NearDupIndex(root, num_buckets=8, storage=storage_cls(root))
+        idx = NearDupIndex(str(tmp_path / "ndx"), num_buckets=8)
         idx.admit(hist, 0)
         idx.commit()
         got = _probe_set(idx.probe(batch))
@@ -126,8 +123,7 @@ class TestNearDupIndex:
             idx.probe(batch.repartition(7))
         )
 
-    @pytest.mark.parametrize("distributed", [False, True])
-    def test_compaction_preserves_results(self, spark, tmp_path, distributed):
+    def test_compaction_preserves_results(self, spark, tmp_path):
         idx = NearDupIndex(str(tmp_path / "ndx"), num_buckets=4)
         idx.admit(_docs(spark, _corpus(0, 40)), 0)
         idx.commit()
@@ -135,19 +131,22 @@ class TestNearDupIndex:
         idx.commit()
         batch = _docs(spark, _corpus(500, 540))
         before = _probe_set(idx.probe(batch))
-        idx.compact(spark if distributed else None)
-        assert all(
-            len(e["deltas"]) == 1 for e in idx._manifest["buckets"].values()
-        )
+        idx.compact(spark)
+        assert all(len(chain) == 1 for chain in idx.store.chains().values())
         assert _probe_set(idx.probe(batch)) == before
 
-    def test_geometry_change_resets(self, spark, tmp_path):
+    def test_geometry_change_resets(self, spark, tmp_path, caplog):
         root = str(tmp_path / "ndx")
         idx = NearDupIndex(root, num_buckets=8)
         idx.admit(_docs(spark, _corpus(0, 40)), 0)
         idx.commit()
-        re = NearDupIndex(root, num_buckets=4)  # re-routes every bkey
+        with caplog.at_level("WARNING", logger="atra_spark.operators.bucket_chain"):
+            re = NearDupIndex(root, num_buckets=4)  # re-routes every bkey
         assert re.committed_batch is None
+        assert any(
+            "format/geometry mismatch" in r.getMessage() and "'num_buckets': (8, 4)" in r.getMessage()
+            for r in caplog.records
+        )
         re.rebuild(_docs(spark, _corpus(0, 40)))
         got = _probe_set(re.probe(_docs(spark, _corpus(100, 140))))
         want = _exhaustive(spark, _docs(spark, _corpus(100, 140)),
@@ -301,7 +300,12 @@ class TestNearDupIndexEconomics:
     def test_warm_probe_reads_only_new_delta(self, spark, tmp_path):
         """The O(batch) economics: after a probe warms the worker
         cache, admitting one delta and re-probing reads ONLY the new
-        delta files, never the old chain."""
+        delta files, never the old chain. The chain loader runs
+        driver-side here so the counting storage sees its reads (the
+        pandas workers are separate processes)."""
+        from atra_spark.operators.bucket_chain import _CHAIN_CACHE, load_chain
+        from atra_spark.operators.neardup_index import _sort_by_bkey
+
         reads: list[str] = []
 
         class CountingStorage(LocalBucketStorage):
@@ -309,30 +313,39 @@ class TestNearDupIndexEconomics:
                 reads.append(name)
                 return super().read_bytes(bucket, name)
 
-        # single-threaded session state is per-executor; local mode
-        # shares the python workers, so the counter list (driver-side
-        # closure) only works with a storage whose reads happen in the
-        # same process — use spark.sparkContext defaults; the pandas
-        # workers are separate processes, so count via the filesystem
-        # atime-free proxy instead: re-list what _load_bands would
-        # fetch by running it driver-side.
-        from atra_spark.operators.neardup_index import _BAND_CACHE, _load_bands
-
         root = str(tmp_path / "ndx")
         idx = NearDupIndex(root, num_buckets=2,
                            storage=CountingStorage(root))
         idx.admit(_docs(spark, _corpus(0, 40)), 0)
         idx.commit()
-        _BAND_CACHE.clear()
-        chains0 = {int(b): tuple(v["deltas"])
-                   for b, v in idx._manifest["buckets"].items()}
-        for b, ch in chains0.items():
-            _load_bands(idx.storage, b, ch, idx.num_hashes)  # cold: full chain
+        _CHAIN_CACHE.clear()
+        for b, ch in idx.store.chains().items():
+            load_chain(idx.store.storage, b, ch, _sort_by_bkey)  # cold: full chain
         idx.admit(_docs(spark, _corpus(200, 240)), 1)
         idx.commit()
         reads.clear()
-        chains1 = {int(b): tuple(v["deltas"])
-                   for b, v in idx._manifest["buckets"].items()}
-        for b, ch in chains1.items():
-            _load_bands(idx.storage, b, ch, idx.num_hashes)  # warm: tail only
+        for b, ch in idx.store.chains().items():
+            load_chain(idx.store.storage, b, ch, _sort_by_bkey)  # warm: tail only
         assert reads and all("_b00001" in n for n in reads), reads
+
+
+class TestOnDiskCompatibility:
+    """An index directory written by an earlier release of this code
+    (``tests/fixtures/index_compat``, made by
+    ``scripts/make_index_compat_fixtures.py``: 2 buckets, 2 batches, one
+    compaction) opens with its committed batch intact, no reset, and
+    answers probes as it did when it was written."""
+
+    def test_committed_index_opens_without_reset(self, spark, tmp_path, caplog):
+        fx = os.path.join(os.path.dirname(__file__), "fixtures", "index_compat")
+        with open(os.path.join(fx, "neardup_index_expected.json")) as f:
+            expected = json.load(f)
+        root = str(tmp_path / "neardup_index")
+        shutil.copytree(os.path.join(fx, "neardup_index"), root)
+        with caplog.at_level("WARNING", logger="atra_spark.operators.bucket_chain"):
+            idx = NearDupIndex(root, num_buckets=expected["num_buckets"])
+        assert not caplog.records
+        assert idx.committed_batch == expected["committed_batch"]
+        batch = _docs(spark, [tuple(r) for r in expected["batch"]])
+        got = sorted([r["doc_id"], r["dup_of"], r["est_jaccard"]] for r in idx.probe(batch).collect())
+        assert got == expected["probe"]

@@ -17,27 +17,22 @@ atra/src/recrawl_management/mod.rs:62 + link_state/db.rs):
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from atra_spark.operators.seen_index import SeenIndex
 
 
-@pytest.fixture(autouse=True, params=["local", "flat_object"])
-def bucket_storage_impl(request, monkeypatch):
-    """Run EVERY SeenIndex test under BOTH storage implementations —
-    the POSIX-directory LocalBucketStorage default and the flat-
-    namespace object-store-shaped FlatObjectBucketStorage — proving
-    the seam is a real swap point, not a single-implementation
-    abstraction (VERDICT r4 #9)."""
-    from atra_spark.operators import seen_index as si
-
-    if request.param == "flat_object":
-        monkeypatch.setattr(
-            si, "_default_storage", lambda root: si.FlatObjectBucketStorage(root)
-        )
+@pytest.fixture(autouse=True, params=["local"])
+def bucket_storage_impl(request):
+    """Every SeenIndex test runs on LocalBucketStorage, the bucket-chain
+    store's one storage implementation; the ``[local]`` id suffix names
+    it."""
     return request.param
 
 
@@ -107,7 +102,7 @@ class TestSeenIndexIncrementality:
         def _snapshot():
             # through the storage seam so the check is layout-agnostic
             # (bucket= dirs locally, flat prefixed keys on object store)
-            return {b: idx.storage.list_bucket(b) for b in range(4)}
+            return {b: idx.store.storage.list_bucket(b) for b in range(4)}
 
         before = _snapshot()
         # a round that touches exactly one URL -> exactly one bucket
@@ -129,9 +124,9 @@ class TestSeenIndexIncrementality:
         for rnd in range(4):
             idx.add_urls(_urls_df(spark, SEEN[rnd * 70 : (rnd + 1) * 70]), rnd)
             idx.commit()
-        idx.compact()
-        for b, ent in idx._manifest["buckets"].items():
-            assert len(ent["deltas"]) == 1  # chain merged
+        idx.compact(spark)
+        for chain in idx.store.chains().values():
+            assert len(chain) == 1  # chain merged
         got = sorted(r["url"] for r in idx.prune_new(_cands_df(spark, SEEN + NEW)).collect())
         assert got == sorted(NEW)
 
@@ -160,13 +155,13 @@ class TestSeenIndexPlanShape:
         import json
 
         # the whole manifest (the only driver-side state) is tiny
-        blob = json.dumps(idx._manifest)
+        blob = json.dumps(idx.store.manifest)
         assert len(blob) < 8192
         assert "bloom" not in blob
-        for ent in idx._manifest["buckets"].values():
-            assert all(d.endswith(".parquet") for d in ent["deltas"])
+        for chain in idx.store.chains().values():
+            assert all(d.endswith(".parquet") for d in chain)
         for b in range(8):
-            assert all(f.endswith(".parquet") for f in idx.storage.list_bucket(b))
+            assert all(f.endswith(".parquet") for f in idx.store.storage.list_bucket(b))
 
 
 class TestFormatMigration:
@@ -294,7 +289,7 @@ class TestStateLookup:
             for r in idx.filter_by_state(frontier, (KIND_DISCOVERED,)).collect()
         )
         assert before == sorted(SEEN[15:30])
-        idx.compact()
+        idx.compact(spark)
         after = sorted(
             r["url"]
             for r in idx.filter_by_state(frontier, (KIND_DISCOVERED,)).collect()
@@ -330,17 +325,23 @@ class TestStateLookup:
 
 
 class TestBucketGeometryMigration:
-    def test_num_buckets_mismatch_resets_for_rebuild(self, spark, tmp_path):
+    def test_num_buckets_mismatch_resets_for_rebuild(self, spark, tmp_path, caplog):
         """Reopening an index with a different bucket count must not
         serve stale routing (seen URLs would probe as new and be
-        re-crawled): the constructor drops the cache so the engine's
-        resume path rebuilds under the requested geometry."""
+        re-crawled): the constructor drops the cache, naming the
+        mismatch in a warning, so the engine's resume path rebuilds
+        under the requested geometry."""
         root = str(tmp_path / "si_nb")
         idx = SeenIndex(root, num_buckets=4)
         idx.add_urls(_urls_df(spark, SEEN[:20]), 0)
         idx.commit()
-        idx2 = SeenIndex(root, num_buckets=8)
+        with caplog.at_level("WARNING", logger="atra_spark.operators.bucket_chain"):
+            idx2 = SeenIndex(root, num_buckets=8)
         assert idx2.committed_round is None  # engine will rebuild()
+        assert any(
+            "format/geometry mismatch" in r.getMessage() and "'num_buckets': (4, 8)" in r.getMessage()
+            for r in caplog.records
+        )
         idx2.rebuild(_urls_df(spark, SEEN[:20]), 0)
         got = sorted(r["url"] for r in idx2.prune_new(_cands_df(spark, SEEN[:40])).collect())
         assert got == sorted(SEEN[20:40])
@@ -364,53 +365,50 @@ class TestBucketGeometryMigration:
         m["bloom_bits"] = 1 << 10
         for b, ent in m["buckets"].items():
             ent["bloom"] = "bloom_r00000.bin"
-            idx.storage.write_bytes(int(b), "bloom_r00000.bin", b"\0" * 128)
+            idx.store.storage.write_bytes(int(b), "bloom_r00000.bin", b"\0" * 128)
         with open(_os.path.join(root, "manifest.json"), "w") as f:
             _json.dump(m, f)
         idx2 = SeenIndex(root, num_buckets=4)  # no raise
         assert idx2.committed_round is None
-        assert all(not idx2.storage.list_bucket(b) for b in range(4))
+        assert all(not idx2.store.storage.list_bucket(b) for b in range(4))
 
 
 class TestStorageSeamAndDistributedCompact:
     """VERDICT r3 #5: all bucket-object I/O goes through the
     LocalBucketStorage seam, and compaction runs as a distributed
-    per-bucket Spark job equivalent to the driver-side path."""
+    per-bucket Spark job whose bases equal the chain fold."""
 
-    def test_distributed_compact_equals_driver_compact(self, spark, tmp_path):
+    def test_distributed_compact_equals_driver_chain_fold(self, spark, tmp_path):
+        """Each compacted base holds exactly the driver-side fold of
+        the chain it replaced (latest kind per hash pair)."""
+        from atra_spark.operators.bucket_chain import read_columns
+        from atra_spark.operators.seen_index import _dedup_last
         from atra_spark.schemas import KIND_DISCOVERED, KIND_PROCESSED_AND_STORED
 
-        roots = {}
-        for mode in ("driver", "dist"):
-            root = str(tmp_path / f"si_{mode}")
-            idx = SeenIndex(root, num_buckets=4)
-            for rnd in range(4):
-                rows = [
-                    (u, KIND_PROCESSED_AND_STORED if rnd == 3 and i % 2 else KIND_DISCOVERED)
-                    for i, u in enumerate(SEEN[rnd * 70 : (rnd + 1) * 70])
-                ]
-                idx.add_urls(spark.createDataFrame(rows, "url string, kind int"), rnd)
-                idx.commit()
-            idx.compact(spark if mode == "dist" else None)
-            roots[mode] = (root, idx)
-        for mode, (root, idx) in roots.items():
-            for b, ent in idx._manifest["buckets"].items():
-                assert len(ent["deltas"]) == 1, (mode, b)
-            got = sorted(
-                r["url"] for r in idx.prune_new(_cands_df(spark, SEEN + NEW)).collect()
-            )
-            assert got == sorted(NEW), mode
-        # identical per-bucket file inventories
-        import os as _os
-
-        def inv(root):
-            return {
-                d: sorted(_os.listdir(_os.path.join(root, d)))
-                for d in _os.listdir(root)
-                if d.startswith("bucket=")
-            }
-
-        assert inv(roots["driver"][0]) == inv(roots["dist"][0])
+        root = str(tmp_path / "si_dist")
+        idx = SeenIndex(root, num_buckets=4)
+        for rnd in range(4):
+            rows = [
+                (u, KIND_PROCESSED_AND_STORED if rnd == 3 and i % 2 else KIND_DISCOVERED)
+                for i, u in enumerate(SEEN[rnd * 70 : (rnd + 1) * 70])
+            ]
+            idx.add_urls(spark.createDataFrame(rows, "url string, kind int"), rnd)
+            idx.commit()
+        storage = idx.store.storage
+        want = {}
+        for b, chain in idx.store.chains().items():
+            parts = [read_columns(storage, b, name) for name in chain]
+            want[b] = _dedup_last({c: np.concatenate([p[c] for p in parts]) for c in parts[0]})
+        idx.compact(spark)
+        for b, chain in idx.store.chains().items():
+            assert chain == ("hashes_base_r00003.parquet",), b
+            assert storage.list_bucket(b) == list(chain), b
+            got = read_columns(storage, b, chain[0])
+            assert list(got) == ["h1", "h2", "kind"]
+            for c in got:
+                assert np.array_equal(got[c], want[b][c]), (b, c)
+        got = sorted(r["url"] for r in idx.prune_new(_cands_df(spark, SEEN + NEW)).collect())
+        assert got == sorted(NEW)
 
     def test_compact_preserves_latest_kind(self, spark, tmp_path):
         from atra_spark.schemas import KIND_DISCOVERED, KIND_PROCESSED_AND_STORED
@@ -437,34 +435,58 @@ class TestStorageSeamAndDistributedCompact:
         assert all(kinds[u] == KIND_PROCESSED_AND_STORED for u in SEEN[:20])
         assert all(kinds[u] == KIND_DISCOVERED for u in SEEN[20:40])
 
-    def test_all_io_routes_through_storage(self, spark, tmp_path, monkeypatch):
+    def test_all_io_routes_through_storage(self, spark, tmp_path):
         """No direct file I/O outside the seam: a storage subclass that
-        counts calls sees every read the probe makes."""
-        from atra_spark.operators.seen_index import (
-            _HASHSET_CACHE,
-            LocalBucketStorage,
-        )
+        logs every call to a file (so the Python workers' calls are
+        visible to the driver) sees each delta written by ``add_urls``,
+        each chain file the probe reads, and the compaction's base
+        writes and sweep."""
+        from atra_spark.operators.bucket_chain import LocalBucketStorage
 
-        calls = {"read_pairs": 0}
+        log = str(tmp_path / "io.log")
 
         class CountingStorage(LocalBucketStorage):
-            def read_pairs(self, bucket, name):
-                calls["read_pairs"] += 1
-                return super().read_pairs(bucket, name)
+            def _log(self, op, bucket, name):
+                with open(log, "a") as f:
+                    f.write(f"{op} {bucket} {name}\n")
+
+            def read_bytes(self, bucket, name):
+                self._log("read", bucket, name)
+                return super().read_bytes(bucket, name)
+
+            def write_bytes(self, bucket, name, data):
+                self._log("write", bucket, name)
+                super().write_bytes(bucket, name, data)
+
+            def remove(self, bucket, name):
+                self._log("remove", bucket, name)
+                super().remove(bucket, name)
+
+        def calls():
+            with open(log) as f:
+                lines = [ln.split() for ln in f]
+            os.remove(log)
+            return sorted((op, int(b), name) for op, b, name in lines)
 
         root = str(tmp_path / "si_count")
         idx = SeenIndex(root, num_buckets=4, storage=CountingStorage(root))
-        idx.add_urls(_urls_df(spark, SEEN[:60]), 0)
-        idx.commit()
-        _HASHSET_CACHE.clear()
-        got = idx.prune_new(_cands_df(spark, SEEN[:60] + NEW[:20])).collect()
+        for rnd in range(2):
+            idx.add_urls(_urls_df(spark, SEEN[rnd * 60 : (rnd + 1) * 60]), rnd)
+            idx.commit()
+        chains = idx.store.chains()
+        assert set(chains) == set(range(4))
+        assert all(len(chain) == 2 for chain in chains.values())
+        assert calls() == sorted(
+            ("write", b, name) for b, chain in chains.items() for name in chain
+        )
+        got = idx.prune_new(_cands_df(spark, SEEN[:120] + NEW[:20])).collect()
         assert sorted(r["url"] for r in got) == sorted(NEW[:20])
-        # local[n]: the counting subclass instance is the one the tasks
-        # pickled, but the counters live per python worker — assert via
-        # a fresh driver-side probe instead
-        s1, s2, sk = idx.storage.read_pairs(0, idx._manifest["buckets"]["0"]["deltas"][0]) \
-            if "0" in idx._manifest["buckets"] else (None, None, None)
-        assert calls["read_pairs"] >= 1 or s1 is not None
+        assert set(calls()) == {("read", b, name) for b, chain in chains.items() for name in chain}
+        idx.compact(spark)
+        assert calls() == sorted(
+            [(op, b, name) for b, chain in chains.items() for name in chain for op in ("read", "remove")]
+            + [("write", b, "hashes_base_r00001.parquet") for b in chains]
+        )
 
 
 class TestTwoPhaseCompaction:
@@ -473,6 +495,9 @@ class TestTwoPhaseCompaction:
     can never leave a committed manifest referencing deleted files."""
 
     def test_bucket_fold_is_write_only(self, spark, tmp_path):
+        from atra_spark.operators.bucket_chain import fold_bucket
+        from atra_spark.operators.seen_index import _dedup_last
+
         root = str(tmp_path / "si")
         idx = SeenIndex(root, num_buckets=2)
         for rnd in range(3):
@@ -480,9 +505,9 @@ class TestTwoPhaseCompaction:
             idx.commit()
         # simulate the crash window: run ONLY the per-bucket fold (what
         # executor tasks do), no manifest publish, no GC
-        for b, ent in idx._manifest["buckets"].items():
-            SeenIndex._compact_bucket(
-                idx.storage, int(b), list(ent["deltas"]), "hashes_base_r00002.parquet"
+        for b, chain in idx.store.chains().items():
+            fold_bucket(
+                idx.store.storage, b, list(chain), "hashes_base_r00002.parquet", _dedup_last
             )
         # the committed manifest's chain files must all still exist -> a
         # fresh index over the same root probes correctly
@@ -500,15 +525,45 @@ class TestTwoPhaseCompaction:
             idx.commit()
         # leave a stale pre-fold base around (the crash-between-publish-
         # and-GC artifact) and compact: the sweep must remove it
-        idx.storage.write_bytes(0, "hashes_base_r00000.parquet", b"junk")
-        idx.compact()
-        for b, ent in idx._manifest["buckets"].items():
+        idx.store.storage.write_bytes(0, "hashes_base_r00000.parquet", b"junk")
+        idx.compact(spark)
+        for b, chain in idx.store.chains().items():
             files = [
-                f for f in idx.storage.list_bucket(int(b))
+                f for f in idx.store.storage.list_bucket(b)
                 if f.startswith("hashes")
             ]
-            assert files == list(ent["deltas"])  # exactly the live base
+            assert files == list(chain)  # exactly the live base
         got = sorted(
             r["url"] for r in idx.prune_new(_cands_df(spark, SEEN[:150] + NEW)).collect()
         )
         assert got == sorted(NEW)
+
+
+class TestOnDiskCompatibility:
+    """An index directory written by an earlier release of this code
+    (``tests/fixtures/index_compat``, made by
+    ``scripts/make_index_compat_fixtures.py``: 2 buckets, 2 rounds, one
+    compaction) opens with its committed round intact, no reset, and
+    serves the answers recorded when it was written."""
+
+    def test_committed_index_opens_without_reset(self, spark, tmp_path, caplog):
+        fx = os.path.join(os.path.dirname(__file__), "fixtures", "index_compat")
+        with open(os.path.join(fx, "seen_index_expected.json")) as f:
+            expected = json.load(f)
+        root = str(tmp_path / "seen_index")
+        shutil.copytree(os.path.join(fx, "seen_index"), root)
+        with open(os.path.join(root, "manifest.json")) as f:
+            manifest = f.read()
+        with caplog.at_level("WARNING", logger="atra_spark.operators.bucket_chain"):
+            idx = SeenIndex(root, num_buckets=expected["num_buckets"])
+        assert not caplog.records
+        assert idx.committed_round == expected["committed_round"]
+        cands = _urls_df(spark, expected["candidates"])
+        assert sorted(r["url"] for r in idx.prune_new(cands).collect()) == expected["prune_new"]
+        kinds = {
+            r["url"]: r["kind"]
+            for r in idx.filter_by_state(cands, None, with_kind=True).collect()
+        }
+        assert kinds == expected["kinds"]
+        with open(os.path.join(root, "manifest.json")) as f:
+            assert f.read() == manifest
